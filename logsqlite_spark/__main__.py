@@ -118,10 +118,10 @@ def main(argv: list[str] | None = None) -> int:
                     sys.stdout.write(r["line"])
                 sys.stdout.flush()
         else:
-            df = eng.read_logs(a.container, since=a.since, until=a.until,
-                               tail=a.tail)
-            for r in df.toLocalIterator():
-                sys.stdout.write(r["line"])
+            for t in eng.scan(a.container, since=a.since, until=a.until,
+                              tail=a.tail):
+                sys.stdout.writelines(ln or "" for ln in
+                                      t.column("line").to_pylist())
         return 0
 
     if a.cmd == "sql":

@@ -5,7 +5,9 @@ docker.rs) onto Python methods over Spark:
 
 - StartLogging  -> :meth:`Engine.start_logging`
 - StopLogging   -> :meth:`Engine.stop_logging`
-- ReadLogs      -> :meth:`Engine.read_logs` / :meth:`Engine.follow`
+- ReadLogs      -> :meth:`Engine.scan` (served on the driver),
+                   :meth:`Engine.follow_tail` / :meth:`Engine.follow_live`
+                   (follow); :meth:`Engine.read_logs` is the DataFrame twin
 - Capabilities  -> trivially {"ReadLogs": True}
 
 plus boot replay (statehandler.rs:193-219 -> :meth:`Engine.replay`)
@@ -65,6 +67,8 @@ class Engine:
         # sequential loop too (cleaner.rs:134-158) — while the commit
         # conflict check stays as the cross-process safety net.
         self._maintenance_lock = threading.Lock()
+        # failed background cleaner passes (see start_cleaner)
+        self.cleaner_errors = 0
 
     # -- data access ---------------------------------------------------------
 
@@ -254,16 +258,16 @@ class Engine:
     # fat commit would stall the ingest hot path for every follower.
     # A commit whose subscribed-container slice exceeds either bound
     # sheds to a RESYNC sentinel: the follower re-reads `seq > cursor`
-    # from the committed table in ITS OWN thread (one bounded Spark
-    # job — the same recovery follow_tail uses when a spool file
-    # vanishes), and the commit loop pays only a few stat() calls.
+    # from the committed table in ITS OWN thread (the same scan
+    # follow_tail resyncs with when a spool file vanishes), and the
+    # commit loop pays only a few stat() calls.
     LIVE_MAX_BYTES_PER_COMMIT = 32 << 20
     LIVE_MAX_FILES_PER_COMMIT = 64
     _LIVE_RESYNC = "__resync__"
 
     def _publish_live(self, res: dict) -> None:
-        """Post-commit fan-out to in-process followers: pyarrow-reads
-        ONLY the just-committed batch's files for SUBSCRIBED containers
+        """Post-commit fan-out to in-process followers: scans ONLY the
+        just-committed batch's files for SUBSCRIBED containers
         (footer-listed rel paths ride the commit result) — no Spark
         job, driver cost O(batch ∩ followed) and HARD-BOUNDED per
         commit (see LIVE_MAX_*; oversized slices shed to resync).
@@ -276,11 +280,6 @@ class Engine:
             subs = {c: list(qs) for c, qs in self._live_subs.items() if qs}
         if not subs:
             return
-        import datetime as _dt
-
-        import pyarrow.parquet as pq
-        from pyspark.sql import Row
-
         from logsqlite_spark.table import escape_partition_value
 
         for cid, queues in subs.items():
@@ -301,17 +300,9 @@ class Engine:
                 for q in queues:
                     q.put(self._LIVE_RESYNC)
                 continue
-            rows = []
-            for f in sel:
-                date = _dt.date.fromisoformat(
-                    f.split("/")[1].split("=", 1)[1])
-                for rec in pq.read_table(
-                        str(self.table.dir / f)).to_pylist():
-                    rec["container_id"] = cid
-                    rec["date"] = date
-                    rows.append(Row(**rec))
+            rows = [r for t in self.scan(cid, snapshot={"files": sel})
+                    for r in R.rows_of(t, cid)]
             if rows:
-                rows.sort(key=lambda r: r["seq"])
                 for q in queues:
                     q.put(rows)
 
@@ -345,17 +336,8 @@ class Engine:
                 snap = self.table.import_existing()
                 cursor = int(snap.get("high_water", {})
                              .get(container_id, 0))
-                hist = R.read_logs(
-                    self.table.read_df(self.spark, snap),
-                    container_id=container_id, since=since, tail=tail)
-                chunk = []
-                for row in hist.toLocalIterator():
-                    chunk.append(row)
-                    if len(chunk) >= FW.FOLLOW_EMIT_BATCH:
-                        yield chunk
-                        chunk = []
-                if chunk:
-                    yield chunk
+                yield from self._scan_rows(snap, container_id,
+                                           since=since, tail=tail)
                 idle = 0
                 while idle < max_idle_polls and not (stop and stop()):
                     try:
@@ -367,24 +349,12 @@ class Engine:
                         # shed path (r16): the commit was too fat for
                         # the in-thread fan-out — catch up from the
                         # committed table in THIS thread instead
-                        from pyspark.sql import functions as _F
-
                         snap2 = self.table.import_existing()
                         hw2 = int(snap2.get("high_water", {})
                                   .get(container_id, 0))
                         if hw2 > cursor:
-                            catchup = (R.read_logs(
-                                self.table.read_df(self.spark, snap2),
-                                container_id=container_id)
-                                .filter(_F.col("seq") > cursor))
-                            chunk = []
-                            for row in catchup.toLocalIterator():
-                                chunk.append(row)
-                                if len(chunk) >= FW.FOLLOW_EMIT_BATCH:
-                                    yield chunk
-                                    chunk = []
-                            if chunk:
-                                yield chunk
+                            yield from self._scan_rows(
+                                snap2, container_id, cursor=cursor + 1)
                             cursor = hw2
                             idle = 0
                         continue
@@ -423,6 +393,29 @@ class Engine:
                   until: str | None = None, tail: int | None = None) -> DataFrame:
         return R.read_logs(self.logs_df(), container_id=container_id,
                            since=since, until=until, tail=tail)
+
+    def scan(self, container_id: str, since: str | None = None,
+             until: str | None = None, tail: int | None = None,
+             cursor: int | None = None, snapshot: dict | None = None):
+        """The serving twin of :meth:`read_logs`: one container's
+        committed rows read on the driver (no Spark job), as Arrow
+        tables in seq order — see ``read.scan_container``. Planning
+        happens before this returns. ``snapshot`` defaults to the
+        latest committed manifest."""
+        if snapshot is None:
+            snapshot = self.table.import_existing()
+        return R.scan_container(self.table.dir, snapshot, container_id,
+                                since=since, until=until, tail=tail,
+                                cursor=cursor)
+
+    def _scan_rows(self, snapshot: dict, container_id: str, **kw):
+        """:meth:`scan` as follow chunks: lists of at most
+        ``FOLLOW_EMIT_BATCH`` Rows, so a long catch-up never sits in
+        one driver list."""
+        for t in self.scan(container_id, snapshot=snapshot, **kw):
+            for off in range(0, t.num_rows, FW.FOLLOW_EMIT_BATCH):
+                yield R.rows_of(t.slice(off, FW.FOLLOW_EMIT_BATCH),
+                                container_id)
 
     def follow(self, container_id: str, since: str | None = None,
                tail: int | None = None, poll_interval_s: float = 1.0,
@@ -565,17 +558,8 @@ class Engine:
             cursor = int(snap.get("high_water", {}).get(container_id, 0))
             last_name = ING._norm_path(
                 snap.get("last_file", {}).get(container_id, ""))
-            hist = R.read_logs(
-                self.table.read_df(self.spark, snap),
-                container_id=container_id, since=since, tail=tail)
-            chunk = []
-            for row in hist.toLocalIterator():
-                chunk.append(row)
-                if len(chunk) >= FW.FOLLOW_EMIT_BATCH:
-                    yield chunk
-                    chunk = []
-            if chunk:
-                yield chunk
+            yield from self._scan_rows(snap, container_id,
+                                       since=since, tail=tail)
             idle = 0
             import time as _time
             while idle < max_idle_polls and not (stop and stop()):
@@ -598,23 +582,13 @@ class Engine:
                     # files the manifest already covered — duplicate
                     # rows, then over-advanced seqs dropping real ones
                     snap2 = self.table.manifest()
-                    # chunked catch-up (same discipline as follow_iter
-                    # and the history emit above): a consumer stalled
-                    # for minutes resyncs over everything ingested
-                    # meanwhile — an unbounded collect() would hold
-                    # that whole backlog in one driver list
-                    catchup = R.read_logs(
-                        self.table.read_df(self.spark, snap2),
-                        container_id=container_id, cursor=cursor + 1)
-                    rchunk = []
-                    for row in catchup.toLocalIterator():
-                        rchunk.append(row)
-                        if len(rchunk) >= FW.FOLLOW_EMIT_BATCH:
-                            yield rchunk
-                            emitted = True
-                            rchunk = []
-                    if rchunk:
-                        yield rchunk
+                    # chunked catch-up (same discipline as the history
+                    # emit above): a consumer stalled for minutes
+                    # resyncs over everything ingested meanwhile — one
+                    # list would hold that whole backlog on the driver
+                    for rows in self._scan_rows(snap2, container_id,
+                                                cursor=cursor + 1):
+                        yield rows
                         emitted = True
                     cursor = max(cursor, int(
                         snap2.get("high_water", {})
@@ -764,7 +738,10 @@ class Engine:
     def start_cleaner(self, interval_s: float | None = None):
         """The cleaner loop (cleaner.rs:134-158): a background thread
         running :meth:`cleanup_all` every interval until stopped.
-        Returns a ``threading.Event``; set it to stop the loop."""
+        A failed pass never kills the daemon: it is counted in
+        ``cleaner_errors`` and reported on stderr, and the loop goes
+        on. Returns a ``threading.Event``; set it to stop the loop."""
+        import sys
         import threading
 
         interval = interval_s if interval_s is not None \
@@ -775,8 +752,10 @@ class Engine:
             while not stop_flag.wait(interval):
                 try:
                     self.cleanup_all()
-                except Exception:  # cleaner must never kill the daemon
-                    pass
+                except Exception as e:  # noqa: BLE001 — daemon thread
+                    self.cleaner_errors += 1
+                    print(f"[logsqlite-spark] cleaner pass failed: "
+                          f"{type(e).__name__}: {e}", file=sys.stderr)
 
         t = threading.Thread(target=loop, name="logsqlite-cleaner",
                              daemon=True)

@@ -43,6 +43,13 @@ def rfc3339_to_nanos(value: str) -> int | None:
     except (ValueError, OverflowError):
         return None
 
+_NANOS_MIN, _NANOS_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def _clamp_nanos(n: int | None) -> int | None:
+    return None if n is None else min(max(n, _NANOS_MIN), _NANOS_MAX)
+
+
 def normalize_read_params(
     since: str | None,
     until: str | None,
@@ -51,13 +58,16 @@ def normalize_read_params(
     """Apply docker.rs:144-166 sentinel elimination.
 
     Returns (since_nanos, until_nanos, tail) with sentinels/unparseables
-    mapped to None; tail < 1 means "all".
+    mapped to None; tail < 1 means "all". A bound outside the int64
+    range ``ts_nanos`` lives in (before 1677 or after 2262) is clamped
+    to it, so it compares like the far past or future it names instead
+    of overflowing the predicate literal.
     """
     since_n = None
     if since is not None and since != DOCKER_TS_SENTINEL:
-        since_n = rfc3339_to_nanos(since)
+        since_n = _clamp_nanos(rfc3339_to_nanos(since))
     until_n = None
     if until is not None and until != DOCKER_TS_SENTINEL:
-        until_n = rfc3339_to_nanos(until)
+        until_n = _clamp_nanos(rfc3339_to_nanos(until))
     norm_tail = tail if tail is not None and tail >= 1 else None
     return since_n, until_n, norm_tail

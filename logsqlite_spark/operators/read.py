@@ -21,14 +21,27 @@ partitions before any task launches — the moral equivalent of the
 reference's ``idx_ts`` B-tree, but free and distributed. The final
 ``orderBy(seq)`` is the only shuffle, and only over rows that survived
 pruning; tail queries avoid even that via top-k.
+
+Serving path: one container's ReadLogs (and follow history/resync) is
+small and interactive, so a Spark job's start-up cost would dominate it.
+:func:`scan_container` answers it on the driver with ``pyarrow.dataset``
+over the committed snapshot's files, with the same semantics as
+:func:`read_logs` (inclusive nanosecond bounds, tail after the filters,
+seq order). The DataFrame functions above stay for bulk reads and SQL.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import functools
+import operator
+from datetime import datetime, timedelta, timezone
+
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from logsqlite_spark.functions.time import normalize_read_params
+from logsqlite_spark.schema import LOGS_SCHEMA
+from logsqlite_spark.table import escape_partition_value
 
 def apply_read_filters(
     logs: DataFrame,
@@ -171,3 +184,180 @@ def count_per_container(
     size.
     """
     return logs.groupBy(container_col).agg(F.count(F.lit(1)).alias("n_lines"))
+
+# -- driver-side scan of the committed snapshot --------------------------------
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+# the Spark row shape every follow path emits (LOGS_SCHEMA order)
+_LOG_ROW = Row(*LOGS_SCHEMA.fieldNames())
+_META_ROW = Row("last", "id", "ordinal")
+
+
+@functools.cache
+def _arrow_schema():
+    """The data-file columns as Arrow types. Passed explicitly, it reads
+    every file the same way whatever physical types its writer chose
+    (ingest writes ``seq`` as int32 and ``ts`` as INT96), with nulls for
+    columns a file lacks."""
+    import pyarrow as pa
+
+    return pa.schema([
+        ("seq", pa.int64()), ("ts_nanos", pa.int64()),
+        ("ts", pa.timestamp("us")), ("source", pa.string()),
+        ("line", pa.string()), ("partial", pa.bool_()),
+        ("partial_meta", pa.struct([("last", pa.bool_()),
+                                    ("id", pa.string()),
+                                    ("ordinal", pa.int32())])),
+    ])
+
+
+def _utc_day(ns: int) -> str:
+    """The ``date`` partition ingest gives a row with this ``ts_nanos``:
+    ``to_date(timestamp_micros(ts_nanos div 1000))`` in UTC, where
+    ``div`` truncates toward zero."""
+    us = abs(ns) // 1000
+    return (_EPOCH + timedelta(microseconds=us if ns >= 0 else -us)) \
+        .date().isoformat()
+
+
+def _file_ranges(frag, since_n, until_n, cursor):
+    """(seq_lo, seq_hi, rows) of one file from its footer, or None when
+    the footer proves no row can pass the filters. A missing ``seq``
+    statistic gives an unbounded range."""
+    frag.ensure_complete_metadata()
+    rows, seqs, tss = 0, [], []
+    for rg in frag.row_groups:
+        rows += rg.num_rows
+        st = rg.statistics or {}
+        seqs.append(st.get("seq"))
+        tss.append(st.get("ts_nanos"))
+    if rows == 0:
+        return None
+    if all(s and s.get("min") is not None for s in seqs):
+        lo = min(s["min"] for s in seqs)
+        hi = max(s["max"] for s in seqs)
+    else:
+        lo, hi = float("-inf"), float("inf")
+    if cursor is not None and hi < cursor:
+        return None
+    if all(t and t.get("min") is not None for t in tss) and (
+            (since_n is not None and max(t["max"] for t in tss) < since_n)
+            or (until_n is not None
+                and min(t["min"] for t in tss) > until_n)):
+        return None
+    return lo, hi, rows
+
+
+def scan_container(root, snapshot: dict, container_id: str,
+                   since: str | None = None, until: str | None = None,
+                   tail: int | None = None, cursor: int | None = None):
+    """One container's committed rows, read on the driver with
+    ``pyarrow.dataset``: the reference's ReadLogs query
+    (logger.rs:303-392) with :func:`read_logs` semantics — inclusive
+    nanosecond ``since``/``until``, ``tail`` applied after the filters,
+    ``seq >= cursor``, rows in seq (arrival) order.
+
+    Planning runs before this returns, so a caller can report a failure
+    before it commits to a response:
+
+    - files: the snapshot's files under ``container_id=<escaped>/date=``,
+      pruned to the UTC days of since/until, then by each footer's
+      ``seq``/``ts_nanos`` statistics;
+    - groups: files whose ``seq`` ranges overlap are merged, and the
+      groups are ordered by seq. Each group is read with the predicates
+      pushed down and sorted by ``seq``, so driver memory is bounded by
+      the largest overlapping group, not by the container (a file
+      without statistics overlaps everything: correct, not bounded);
+    - tail: groups are counted from the newest down, reading only the
+      filtered ``seq`` column (footers alone when nothing filters),
+      until ``tail`` rows are found; emission starts at that boundary.
+
+    Returns an iterator of Arrow tables (one per non-empty group) with
+    the data-file columns, each sorted by ``seq``.
+    """
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    since_n, until_n, tail_n = normalize_read_params(since, until, tail)
+    prefix = f"container_id={escape_partition_value(container_id)}/date="
+    lo_day = "" if since_n is None else _utc_day(since_n)
+    hi_day = "~" if until_n is None else _utc_day(until_n)
+    k = len(prefix)
+    paths = [f"{root}/{f}" for f in snapshot.get("files") or ()
+             if f.startswith(prefix) and lo_day <= f[k:k + 10] <= hi_day]
+    if not paths:
+        return iter(())
+    schema = _arrow_schema()
+    dataset = ds.dataset(paths, schema=schema, format="parquet")
+    files = []
+    for frag in dataset.get_fragments():
+        r = _file_ranges(frag, since_n, until_n, cursor)
+        if r is not None:
+            files.append((r[0], r[1], r[2], frag))
+    files.sort(key=lambda f: f[0])
+    groups: list[list] = []  # [seq_hi, rows, [fragments]]
+    for lo, hi, rows, frag in files:
+        if groups and lo <= groups[-1][0]:
+            g = groups[-1]
+            g[0] = max(g[0], hi)
+            g[1] += rows
+            g[2].append(frag)
+        else:
+            groups.append([hi, rows, [frag]])
+
+    conds = []
+    if cursor is not None:
+        conds.append(ds.field("seq") >= int(cursor))
+    if since_n is not None:
+        conds.append(ds.field("ts_nanos") >= since_n)
+    if until_n is not None:
+        conds.append(ds.field("ts_nanos") <= until_n)
+    pred = functools.reduce(operator.and_, conds) if conds else None
+
+    def read(frags, **kw):
+        # single-threaded: a group is small, its cost is per-file
+        # opens, and the server already runs one thread per request
+        return ds.FileSystemDataset(frags, schema, dataset.format,
+                                    dataset.filesystem) \
+            .to_table(filter=pred, use_threads=False, **kw)
+
+    if tail_n is not None:
+        need = tail_n
+        for i in range(len(groups) - 1, -1, -1):
+            if pred is None and groups[i][1] < need:
+                need -= groups[i][1]
+                continue
+            seqs = read(groups[i][2], columns=["seq"])["seq"]
+            if len(seqs) < need:
+                need -= len(seqs)
+                continue
+            top = seqs.take(pc.top_k_unstable(seqs, k=need))
+            conds.append(ds.field("seq") >= pc.min(top).as_py())
+            pred = functools.reduce(operator.and_, conds)
+            groups = groups[i:]
+            break
+
+    def emit():
+        for _, _, frags in groups:
+            t = read(frags)
+            if t.num_rows:
+                yield t.sort_by("seq")
+
+    return emit()
+
+
+def rows_of(table, container_id: str) -> list:
+    """Spark ``Row``s (``LOGS_SCHEMA`` fields) of a scanned Arrow table
+    — the row shape of every follow path — built from column arrays."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cols = [table.column(c).to_pylist()
+            for c in ("seq", "ts_nanos", "ts", "source", "line", "partial")]
+    metas = [None if m is None else _META_ROW(m["last"], m["id"],
+                                              m["ordinal"])
+             for m in table.column("partial_meta").to_pylist()]
+    dates = pc.cast(table.column("ts"), pa.date32()).to_pylist()
+    return [_LOG_ROW(seq, tn, ts, src, line, part, meta, container_id, d)
+            for seq, tn, ts, src, line, part, meta, d
+            in zip(*cols, metas, dates)]

@@ -15,10 +15,18 @@ Design notes:
   Spark's driver schedules concurrent jobs fine). Control-plane
   mutations still serialize through the Engine's state store, like the
   reference's actor loop (statehandler.rs:102-191).
-- ReadLogs streams with chunked transfer encoding; frames come off
-  ``toLocalIterator`` so the driver never materializes the result
-  (S8's discipline). Follow=true keeps the body open and polls, 1 s
-  wake / 3600 idle polls, exactly like the reference's waker
+- ReadLogs is answered on the driver without a Spark job: the
+  committed snapshot's files for the container are scanned with
+  ``pyarrow.dataset`` (``read.scan_container``) and encoded to frames
+  from column arrays (``wire.frames_of``). Files whose seq ranges
+  overlap are read as one group, so the driver holds at most the
+  largest such group, never the whole result. The scan is planned
+  (snapshot, file selection, footers, tail boundary) before the status
+  line goes out, so a planning failure is a well-formed JSON 500. The
+  body is chunked, one chunk per group; a failure after the status
+  line closes the connection without the terminating chunk, so the
+  client sees a truncated stream, never a clean end. Follow=true keeps
+  the body open and polls, like the reference's waker
   (logger.rs:442-451).
 - Docker sometimes omits content-type; the reference injects it via
   middleware (main.rs:17-29). We simply never require it.
@@ -116,7 +124,7 @@ class _Handler(BaseHTTPRequestHandler):
                 self._read_logs(eng, body)
             else:
                 self._reply_json({"Err": f"unknown route {self.path}"}, 404)
-        except BrokenPipeError:
+        except (BrokenPipeError, ConnectionResetError):
             pass  # client hung up mid-stream (docker does this on ^C)
         except Exception as e:  # noqa: BLE001 - protocol says Err string
             try:
@@ -125,7 +133,9 @@ class _Handler(BaseHTTPRequestHandler):
                 pass
 
     def _read_logs(self, eng: Engine, body: dict) -> None:
-        from logsqlite_spark.operators.wire import stream_wire_frames, to_wire_frames
+        import sys
+
+        from logsqlite_spark.operators.wire import frames_of
 
         info = body.get("Info") or {}
         cfg = body.get("Config") or {}
@@ -134,59 +144,67 @@ class _Handler(BaseHTTPRequestHandler):
         until = _norm_time(cfg.get("Until"))
         tail = _norm_tail(cfg.get("Tail"))
         follow = bool(cfg.get("Follow"))
+        # errors up to here reach do_POST before any byte is sent
+        tables = None if follow else \
+            eng.scan(cid, since=since, until=until, tail=tail)
 
         self.send_response(200)
         self.send_header("Content-Type", "application/x-json-stream")
         self.send_header("Transfer-Encoding", "chunked")
         self.end_headers()
 
-        def send(frame: bytes) -> None:
-            self.wfile.write(f"{len(frame):x}\r\n".encode())
-            self.wfile.write(frame)
-            self.wfile.write(b"\r\n")
+        def send(frames: list[bytes]) -> None:
+            if frames:
+                chunk = b"".join(frames)
+                self.wfile.write(f"{len(chunk):x}\r\n".encode() + chunk
+                                 + b"\r\n")
 
-        if follow:
-            stop = getattr(self.server, "stopping", None)
-            from logsqlite_spark.operators.wire import entry_of
-            from logsqlite_spark.sources.frames import encode_frame
-
-            def frame_of(row) -> bytes:
-                """The exact on-wire frame for one row, encoded on the
-                DRIVER (same entry_of contract to_wire_frames runs
-                distributed) — a follow batch is stream-sized, so a
-                Spark job per poll would only add latency."""
-                d = row.asDict() if hasattr(row, "asDict") else dict(row)
-                return encode_frame(entry_of(
-                    d.get("source"), d.get("ts_nanos"), d.get("line"),
-                    d.get("partial"), d.get("partial_meta")))
-
-            # round 13: follow via the driver spool tail — visibility
-            # bounded by the 50 ms tail poll (reference design point:
-            # 1 s poll, logger.rs:287-288), no Spark job per batch.
-            # Idle budget matches the Spark follow path's wall-clock
-            # window (FOLLOW_COUNTER_MAX × 1 s), not the default 1200
-            # tail polls (60 s) — a quiet container must not have its
-            # follow stream cut 60× sooner than before.
-            from logsqlite_spark.streaming.follow import (
-                FOLLOW_COUNTER_MAX, FOLLOW_WAKETIME_S)
-
-            tail_poll_s = 0.05
-            idle_polls = int(FOLLOW_COUNTER_MAX * FOLLOW_WAKETIME_S
-                             / tail_poll_s)
-            for rows in eng.follow_tail(
-                    cid, since=since, tail=tail,
-                    poll_interval_s=tail_poll_s,
-                    max_idle_polls=idle_polls,
-                    stop=(lambda: stop.is_set()) if stop else None):
-                for r in rows:
-                    send(frame_of(r))
-                self.wfile.flush()
-        else:
-            df = eng.read_logs(cid, since=since, until=until, tail=tail)
-            for r in stream_wire_frames(df):
-                send(bytes(r["frame"]))
+        try:
+            if tables is not None:
+                for t in tables:
+                    send(frames_of(t))
+            else:
+                self._follow(eng, cid, since, tail, send)
+        except (BrokenPipeError, ConnectionResetError):
+            raise
+        except Exception as e:  # noqa: BLE001 — the status line is out
+            # a JSON 500 now would land inside the chunked body; end the
+            # connection without the terminating chunk instead
+            self.close_connection = True
+            print(f"[logsqlite-spark] ReadLogs {cid} failed mid-stream: "
+                  f"{type(e).__name__}: {e}", file=sys.stderr)
+            return
         self.wfile.write(b"0\r\n\r\n")
         self.wfile.flush()
+
+    def _follow(self, eng: Engine, cid: str, since, tail, send) -> None:
+        """Follow=true: history from the committed snapshot, then rows
+        as they arrive; every row encoded on the driver with the same
+        frame contract as the non-follow scan."""
+        from logsqlite_spark.operators.wire import frame_of
+
+        stop = getattr(self.server, "stopping", None)
+        # follow via the driver spool tail — visibility
+        # bounded by the 50 ms tail poll (reference design point:
+        # 1 s poll, logger.rs:287-288), no Spark job per batch.
+        # Idle budget matches the Spark follow path's wall-clock
+        # window (FOLLOW_COUNTER_MAX × 1 s), not the default 1200
+        # tail polls (60 s) — a quiet container must not have its
+        # follow stream cut 60× sooner than before.
+        from logsqlite_spark.streaming.follow import (
+            FOLLOW_COUNTER_MAX, FOLLOW_WAKETIME_S)
+
+        tail_poll_s = 0.05
+        idle_polls = int(FOLLOW_COUNTER_MAX * FOLLOW_WAKETIME_S
+                         / tail_poll_s)
+        for rows in eng.follow_tail(
+                cid, since=since, tail=tail,
+                poll_interval_s=tail_poll_s,
+                max_idle_polls=idle_polls,
+                stop=(lambda: stop.is_set()) if stop else None):
+            send([frame_of(r["source"], r["ts_nanos"], r["line"],
+                           r["partial"], r["partial_meta"])
+                  for r in rows])
 
 
 class _UnixHTTPServer(socketserver.ThreadingUnixStreamServer):

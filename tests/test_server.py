@@ -87,6 +87,77 @@ def test_read_unknown_container_empty_stream(server):
     assert list(decode_frames(resp.read())) == []
 
 
+def _ingest(engine, cid, n, start=0):
+    SpoolWriter(engine.config.spool_dir, cid).write_burst([
+        LogEntry(source="stdout", time_nano=BASE_TS + i * 10**9,
+                 line=f"hello-{i}".encode())
+        for i in range(start, start + n)])
+    engine.ingest_once(cid)
+
+
+def test_read_error_before_first_frame_is_json_500(engine, server,
+                                                   monkeypatch):
+    """A ReadLogs that fails while planning answers with a well-formed
+    JSON 500 — no 200 status line or chunked headers go out first —
+    and the connection keeps serving."""
+    engine.start_logging("ce", None)
+    _ingest(engine, "ce", 3)
+
+    def broken(*a, **k):
+        raise OSError("manifest unreadable")
+
+    monkeypatch.setattr(engine, "scan", broken)
+    conn = connect_client(server.socket_path)
+    body = json.dumps({"Info": {"ContainerID": "ce"},
+                       "Config": {"Tail": 2}}).encode()
+    conn.request("POST", "/LogDriver.ReadLogs", body=body,
+                 headers={"Content-Length": str(len(body))})
+    resp = conn.getresponse()
+    assert resp.status == 500
+    assert resp.getheader("Transfer-Encoding") is None
+    assert json.loads(resp.read()) == \
+        {"Err": "OSError: manifest unreadable"}
+
+    monkeypatch.undo()
+    conn.request("POST", "/LogDriver.ReadLogs", body=body,
+                 headers={"Content-Length": str(len(body))})
+    resp = conn.getresponse()
+    assert resp.status == 200
+    assert [e.line for e in decode_frames(resp.read())] == \
+        [b"hello-1\n", b"hello-2\n"]
+    conn.close()
+
+
+def test_read_error_after_first_frame_truncates_stream(engine, server,
+                                                      monkeypatch):
+    """A failure after frames went out must not look like success: the
+    server closes the connection without the terminating chunk, and
+    the client sees a truncated body that holds only the frames sent."""
+    import http.client
+
+    engine.start_logging("cm", None)
+    _ingest(engine, "cm", 2)
+    _ingest(engine, "cm", 2, start=2)  # a second file: a second chunk
+    real = engine.scan
+
+    def fails_after_first(*a, **k):
+        tables = real(*a, **k)
+
+        def gen():
+            yield next(tables)
+            raise OSError("data file vanished")
+        return gen()
+
+    monkeypatch.setattr(engine, "scan", fails_after_first)
+    resp = _post(server, "/LogDriver.ReadLogs",
+                 {"Info": {"ContainerID": "cm"}, "Config": {}})
+    assert resp.status == 200
+    with pytest.raises(http.client.IncompleteRead) as exc:
+        resp.read()
+    assert [e.line for e in decode_frames(exc.value.partial)] == \
+        [b"hello-0\n", b"hello-1\n"]
+
+
 def test_unknown_route_404(server):
     resp = _post(server, "/LogDriver.Bogus", {})
     assert resp.status == 404

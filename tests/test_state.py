@@ -237,6 +237,29 @@ def test_follow_seam_catchup_to_live_no_gap_no_dup(engine):
     assert list(it) == []                             # idle timeout
 
 
+def test_cleaner_counts_and_reports_errors(engine, monkeypatch, capsys):
+    """A failing cleaner pass is counted and printed as ``type:
+    message`` on stderr, and the loop keeps running."""
+    import time as _t
+
+    calls = []
+
+    def broken(*a, **k):
+        calls.append(1)
+        raise RuntimeError("disk full")
+
+    monkeypatch.setattr(engine, "cleanup_all", broken)
+    stop = engine.start_cleaner(interval_s=0.01)
+    deadline = _t.monotonic() + 30
+    while engine.cleaner_errors < 3 and _t.monotonic() < deadline:
+        _t.sleep(0.01)
+    stop.set()
+    assert engine.cleaner_errors >= 3
+    assert len(calls) >= engine.cleaner_errors
+    assert "cleaner pass failed: RuntimeError: disk full" \
+        in capsys.readouterr().err
+
+
 def test_follow_live_seam_catchup_to_live_no_gap_no_dup(engine):
     """follow_live (round 13): same seam contract as follow_iter —
     history from the snapshot, live rows pushed by the ingest commit

@@ -30,3 +30,13 @@ def test_tail_normalization():
     # docker.rs:152: Tail < 1 means "all"
     assert normalize_read_params(None, None, 0)[2] is None
     assert normalize_read_params(None, None, 5)[2] == 5
+
+
+def test_normalize_clamps_bounds_to_int64_nanos():
+    """Bounds a nanosecond int64 cannot hold compare as the far past or
+    future they name (the predicate literal would overflow)."""
+    s, u, _ = normalize_read_params("1500-01-01T00:00:00Z",
+                                    "9999-12-31T23:59:59-01:00", None)
+    assert (s, u) == (-(1 << 63), (1 << 63) - 1)
+    assert normalize_read_params("2024-01-01T00:00:00Z", None, None)[0] \
+        == 1_704_067_200_000_000_000

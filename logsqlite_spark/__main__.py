@@ -113,7 +113,8 @@ def main(argv: list[str] | None = None) -> int:
 
     if a.cmd == "read":
         if a.follow:
-            for rows in eng.follow(a.container, since=a.since, tail=a.tail):
+            for rows in eng.follow_tail(a.container, since=a.since,
+                                        tail=a.tail):
                 for r in rows:
                     sys.stdout.write(r["line"])
                 sys.stdout.flush()

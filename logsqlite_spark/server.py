@@ -26,8 +26,9 @@ Design notes:
   body is chunked, one chunk per group; a failure after the status
   line closes the connection without the terminating chunk, so the
   client sees a truncated stream, never a clean end. Follow=true keeps
-  the body open and polls, like the reference's waker
-  (logger.rs:442-451).
+  the body open and streams rows as spool files are published, like
+  the reference's waker (logger.rs:442-451) but woken by the publish
+  instead of a 1 s timer.
 - Docker sometimes omits content-type; the reference injects it via
   middleware (main.rs:17-29). We simply never require it.
 """
@@ -181,30 +182,23 @@ class _Handler(BaseHTTPRequestHandler):
         """Follow=true: history from the committed snapshot, then rows
         as they arrive; every row encoded on the driver with the same
         frame contract as the non-follow scan."""
+        from contextlib import closing
+
         from logsqlite_spark.operators.wire import frame_of
 
         stop = getattr(self.server, "stopping", None)
-        # follow via the driver spool tail — visibility
-        # bounded by the 50 ms tail poll (reference design point:
-        # 1 s poll, logger.rs:287-288), no Spark job per batch.
-        # Idle budget matches the Spark follow path's wall-clock
-        # window (FOLLOW_COUNTER_MAX × 1 s), not the default 1200
-        # tail polls (60 s) — a quiet container must not have its
-        # follow stream cut 60× sooner than before.
-        from logsqlite_spark.streaming.follow import (
-            FOLLOW_COUNTER_MAX, FOLLOW_WAKETIME_S)
-
-        tail_poll_s = 0.05
-        idle_polls = int(FOLLOW_COUNTER_MAX * FOLLOW_WAKETIME_S
-                         / tail_poll_s)
-        for rows in eng.follow_tail(
+        # follow via the driver spool tail: it wakes on each spool
+        # publish (the reference polls every 1 s, logger.rs:287-288),
+        # no Spark job per batch, and keeps the reference's idle
+        # window. closing(): a hang-up surfaces as an error from
+        # send(), and the tail's inotify fd must go with it.
+        with closing(eng.follow_tail(
                 cid, since=since, tail=tail,
-                poll_interval_s=tail_poll_s,
-                max_idle_polls=idle_polls,
-                stop=(lambda: stop.is_set()) if stop else None):
-            send([frame_of(r["source"], r["ts_nanos"], r["line"],
-                           r["partial"], r["partial_meta"])
-                  for r in rows])
+                stop=(lambda: stop.is_set()) if stop else None)) as it:
+            for rows in it:
+                send([frame_of(r["source"], r["ts_nanos"], r["line"],
+                               r["partial"], r["partial_meta"])
+                      for r in rows])
 
 
 class _UnixHTTPServer(socketserver.ThreadingUnixStreamServer):

@@ -36,7 +36,10 @@ logger.rs:122-123) happen as JVM expressions, not in Python.
 
 from __future__ import annotations
 
+import functools
 import os
+import select
+import time
 from pathlib import Path
 from typing import Iterable, Iterator
 
@@ -115,8 +118,6 @@ class SpoolWriter:
 
     def write_burst(self, entries: Iterable[fr.LogEntry],
                     compress: bool = False) -> str:
-        import time
-
         blob = b"".join(fr.encode_frame(e) for e in entries)
         if compress:
             # rotated-shipper output: whole-file gzip, decoded
@@ -138,6 +139,84 @@ class SpoolWriter:
         os.rename(tmp, name)  # atomic publish: readers never see partials
         self._counter += 1
         return str(name)
+
+
+# inotify(7) event bits (linux/inotify.h)
+_IN_CLOSE_WRITE, _IN_MOVED_TO = 0x08, 0x80
+
+
+@functools.lru_cache(maxsize=1)
+def _libc():
+    """libc with its inotify entry points, or None where it has none."""
+    import ctypes
+
+    try:
+        libc = ctypes.CDLL(None)
+        libc.inotify_init1.argtypes = [ctypes.c_int]
+        libc.inotify_add_watch.argtypes = [ctypes.c_int, ctypes.c_char_p,
+                                           ctypes.c_uint32]
+        libc.inotify_init1.restype = libc.inotify_add_watch.restype = \
+            ctypes.c_int
+    except (OSError, AttributeError):
+        return None
+    return libc
+
+
+class PublishWatch:
+    """Wakes a spool reader when a file is published into one
+    container directory.
+
+    Every writer publishes with tmp + ``os.rename`` (see
+    :class:`SpoolWriter`), so an inotify ``IN_MOVED_TO`` on
+    ``<spool>/<cid>`` fires exactly when a readable file appears;
+    ``IN_CLOSE_WRITE`` also covers a writer that writes in place.
+    Events queue on the fd from the moment it is armed, so a publish
+    landing between a reader's listing and its :meth:`wait` is never
+    lost. Where the watch cannot be armed — no inotify in libc, no
+    directory yet, the per-user inotify limits spent (``EMFILE`` /
+    ``ENOSPC``) — :meth:`wait` is a plain sleep, and arming is retried
+    after each one.
+    """
+
+    def __init__(self, directory: str):
+        self.dir = directory
+        self._fd: int | None = None
+        self._arm()
+
+    def _arm(self) -> None:
+        libc = _libc()
+        if libc is None:
+            return
+        fd = libc.inotify_init1(os.O_NONBLOCK | os.O_CLOEXEC)
+        if fd < 0:
+            return
+        if libc.inotify_add_watch(fd, os.fsencode(self.dir),
+                                  _IN_CLOSE_WRITE | _IN_MOVED_TO) < 0:
+            os.close(fd)
+            return
+        self._fd = fd
+        # poll(2), not select(2): a busy daemon's fds pass FD_SETSIZE
+        self._poll = select.poll()
+        self._poll.register(fd, select.POLLIN)
+
+    def wait(self, timeout: float) -> None:
+        """Return on the next publish or after ``timeout`` seconds,
+        with every queued event drained."""
+        if self._fd is None:
+            time.sleep(timeout)
+            self._arm()
+            return
+        if self._poll.poll(timeout * 1000):
+            try:
+                while os.read(self._fd, 65536):
+                    pass
+            except BlockingIOError:
+                pass
+
+    def close(self) -> None:
+        if self._fd is not None:
+            os.close(self._fd)
+            self._fd = None
 
 
 _BAD_GZIP_SENTINEL = b"\xff\xff\xff\xff"  # framing error -> ONE error row

@@ -55,3 +55,46 @@ def test_cli_gc_keep(spark, tmp_path, capsys):
     assert "deleted_manifests" in capsys.readouterr().out
     cfg = EngineConfig(warehouse_dir=wh)
     assert len(ManifestTable(cfg.logs_dir).generations()) == 2
+
+
+def test_cli_read_follow_is_the_spool_tail(spark, tmp_path, capsys,
+                                           monkeypatch):
+    """read --follow runs the same spool tail as the HTTP follow: it
+    prints the committed history, then a line published after it
+    started, and ends once the idle budget (patched to 2 s here) runs
+    out."""
+    import threading
+    import time
+
+    from logsqlite_spark.api import Engine
+    from logsqlite_spark.sources.frames import LogEntry
+    from logsqlite_spark.sources.spool import SpoolWriter
+    from logsqlite_spark.streaming import follow as FW
+
+    wh = str(tmp_path / "wh")
+    eng = Engine(spark, EngineConfig(warehouse_dir=wh))
+    eng.start_logging("cfl", None, {"delete_when_stopped": "false"})
+    w = SpoolWriter(eng.config.spool_dir, "cfl")
+    base = int(datetime(2024, 1, 1, tzinfo=timezone.utc).timestamp() * 1e9)
+    w.write_burst([LogEntry(source="stdout", time_nano=base + i,
+                            line=f"old-{i}".encode()) for i in range(2)])
+    eng.ingest_once()
+    monkeypatch.setattr(FW, "FOLLOW_COUNTER_MAX", 2)
+
+    rc = {}
+    th = threading.Thread(target=lambda: rc.setdefault("v", main(
+        ["read", "--warehouse", wh, "--container", "cfl", "--follow"])),
+        daemon=True)
+    th.start()
+    out = ""
+    deadline = time.monotonic() + 60
+    while "old-1" not in out and time.monotonic() < deadline:
+        time.sleep(0.05)
+        out += capsys.readouterr().out
+    assert out == "old-0\nold-1\n"
+    w.write_burst([LogEntry(source="stdout", time_nano=base + 10**9,
+                            line=b"new-0")])
+    th.join(timeout=60)
+    assert not th.is_alive()
+    assert rc["v"] == 0
+    assert out + capsys.readouterr().out == "old-0\nold-1\nnew-0\n"

@@ -381,3 +381,49 @@ def test_decisions_served_while_following(spark, engine, server):
     stop.set()
     assert followed[:len(burst1)] == burst1
     assert followed[len(burst1):] == burst2
+
+
+def _inotify_fds() -> int:
+    import os
+
+    n = 0
+    for fd in os.listdir("/proc/self/fd"):
+        try:
+            n += os.readlink(f"/proc/self/fd/{fd}") == "anon_inode:inotify"
+        except OSError:
+            pass
+    return n
+
+
+def test_follow_hangup_releases_inotify_fd(engine, server):
+    """A client that disconnects mid-follow leaves no inotify fd
+    behind: the next publish makes the handler's send fail, and the
+    spool tail's watch is closed with the stream."""
+    import socket
+    import time
+
+    engine.start_logging("chu", None)
+    _ingest(engine, "chu", 2)
+    base = _inotify_fds()
+
+    body = json.dumps({"Info": {"ContainerID": "chu"},
+                       "Config": {"Follow": True}}).encode()
+    s = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
+    s.connect(server.socket_path)
+    s.sendall(b"POST /LogDriver.ReadLogs HTTP/1.1\r\nHost: x\r\n"
+              + f"Content-Length: {len(body)}\r\n\r\n".encode() + body)
+    got = b""
+    while b"hello-1" not in got:
+        chunk = s.recv(65536)
+        assert chunk, got
+        got += chunk
+    assert _inotify_fds() == base + 1         # the tail's watch
+    s.close()
+
+    SpoolWriter(engine.config.spool_dir, "chu").write_burst([
+        LogEntry(source="stdout", time_nano=BASE_TS + 10**11,
+                 line=b"after-hangup")])
+    deadline = time.monotonic() + 30
+    while _inotify_fds() > base and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert _inotify_fds() == base

@@ -1,5 +1,9 @@
 """Control plane: state store (S9) + Engine lifecycle (T3/T5)."""
 
+import os
+import threading
+import time
+
 import pytest
 
 from logsqlite_spark.api import Engine
@@ -370,6 +374,152 @@ def test_follow_tail_seam_and_seq_parity(engine):
     for r in live + third:
         assert table[r["seq"]] == r["line"]
     assert list(it) == []                        # idle timeout
+
+
+def _inotify_fds() -> int:
+    n = 0
+    for fd in os.listdir("/proc/self/fd"):
+        try:
+            n += os.readlink(f"/proc/self/fd/{fd}") == "anon_inode:inotify"
+        except OSError:
+            pass
+    return n
+
+
+class _NoInotify:
+    """A libc whose inotify_init1 fails (EMFILE / no inotify)."""
+
+    @staticmethod
+    def inotify_init1(flags):
+        return -1
+
+
+def _publish_later(spool, cid, n, ts, delay=0.3):
+    """Publish a burst from another thread once the follower idles;
+    returns the thread and a dict filled with the publish time."""
+    at = {}
+
+    def run():
+        time.sleep(delay)
+        at["t"] = time.monotonic()
+        _burst(spool, cid, n, ts=ts)
+    th = threading.Thread(target=run, daemon=True)
+    th.start()
+    return th, at
+
+
+@pytest.mark.parametrize("armed", [True, False],
+                         ids=["inotify", "sleep-fallback"])
+def test_follow_tail_wakes_on_publish(engine, monkeypatch, armed):
+    """An idle follow_tail wakes on the spool publish, not on its poll:
+    with a 5 s poll a burst published while the tail waits is emitted
+    in well under 1 s, with the seqs ingest later commits. With the
+    watch forced to its sleep fallback the same burst is emitted
+    exactly once, on the poll."""
+    from logsqlite_spark.sources import spool as SP
+
+    if not armed:
+        monkeypatch.setattr(SP, "_libc", lambda: _NoInotify())
+    poll = 5.0 if armed else 0.2
+    spool = engine.config.spool_dir
+    engine.start_logging("cwk", None, {"delete_when_stopped": "false"})
+    _burst(spool, "cwk", 2)                                # 1,2
+    engine.ingest_once()
+    base_fds = _inotify_fds()
+
+    it = engine.follow_tail("cwk", poll_interval_s=poll, max_idle_polls=3)
+    assert [r["seq"] for r in next(it)] == [1, 2]
+    assert _inotify_fds() == base_fds + armed
+    th, at = _publish_later(spool, "cwk", 2, BASE_TS + 10**11)  # 3,4
+    live = next(it)
+    lag = time.monotonic() - at["t"]
+    th.join()
+    assert [r["seq"] for r in live] == [3, 4]
+    if armed:
+        assert lag < 1.0, lag
+
+    engine.ingest_once()
+    table = {r["seq"]: r["line"] for r in engine.read_logs("cwk").collect()}
+    assert {r["seq"]: r["line"] for r in live} == {3: "l0\n", 4: "l1\n"}
+    assert all(table[r["seq"]] == r["line"] for r in live)
+    # exactly once: the next chunk is the next burst, not a re-emission
+    th, _ = _publish_later(spool, "cwk", 1, BASE_TS + 2 * 10**11)  # 5
+    assert [r["seq"] for r in next(it)] == [5]
+    th.join()
+    if armed:
+        it.close()
+    else:
+        assert list(it) == []                  # idle polls, no dup
+    assert _inotify_fds() == base_fds
+
+
+def test_follow_tail_before_spool_dir_exists(engine):
+    """A follow started before <spool>/<cid> exists sleeps on the poll
+    until the directory appears, arms its watch then, and delivers the
+    first burst."""
+    spool = engine.config.spool_dir
+    base_fds = _inotify_fds()
+    it = engine.follow_tail("cnew", poll_interval_s=0.05,
+                            max_idle_polls=200)
+    th, _ = _publish_later(spool, "cnew", 3, BASE_TS)
+    assert [r["seq"] for r in next(it)] == [1, 2, 3]
+    th.join()
+    assert _inotify_fds() == base_fds + 1      # armed once the dir exists
+    th, _ = _publish_later(spool, "cnew", 1, BASE_TS + 10**11)
+    assert [r["seq"] for r in next(it)] == [4]
+    th.join()
+    it.close()
+    assert _inotify_fds() == base_fds
+
+
+def test_publish_watch_above_fd_setsize(tmp_path):
+    """A daemon with many open connections hands the watch an fd above
+    FD_SETSIZE (1024), which select(2) cannot wait on; the wait must
+    still time out and wake on a publish."""
+    from logsqlite_spark.sources.spool import PublishWatch
+
+    hold = []
+    try:
+        while not hold or hold[-1] <= 1024:
+            hold.append(os.dup(0))
+        watch = PublishWatch(str(tmp_path / "c"))   # no dir: fallback
+        (tmp_path / "c").mkdir()
+        watch.wait(0.01)                            # re-arms
+        assert _inotify_fds() >= 1
+        t0 = time.monotonic()
+        watch.wait(0.05)
+        assert time.monotonic() - t0 >= 0.04        # timed out
+        th = threading.Timer(0.1, _burst, (str(tmp_path), "c", 1))
+        th.start()
+        t0 = time.monotonic()
+        watch.wait(5.0)
+        assert time.monotonic() - t0 < 1.0          # woke on the publish
+        th.join()
+        watch.close()
+    finally:
+        for fd in hold:
+            os.close(fd)
+
+
+def test_follow_tail_releases_its_watch(engine):
+    """200 follows, half exhausted and half closed mid-stream, leave
+    no fd behind. Total fds get a small slack for py4j's connection
+    pool; a per-follow leak would add hundreds."""
+    engine.start_logging("cfd", None, {"delete_when_stopped": "false"})
+    _burst(engine.config.spool_dir, "cfd", 2)
+    engine.ingest_once()
+    base_fds = _inotify_fds()
+    before = len(os.listdir("/proc/self/fd"))
+    for i in range(200):
+        it = engine.follow_tail("cfd", poll_interval_s=0.001,
+                                max_idle_polls=1)
+        assert [r["seq"] for r in next(it)] == [1, 2]
+        if i % 2:
+            it.close()
+        else:
+            assert list(it) == []
+    assert _inotify_fds() == base_fds
+    assert len(os.listdir("/proc/self/fd")) < before + 10
 
 
 def test_follow_tail_resyncs_when_ingest_consumes_between_polls(engine):

@@ -315,12 +315,12 @@ class Engine:
         VERDICT r12 #5): history from a manifest snapshot, then live
         rows pushed by the ingest commit hook — one trigger (the
         ingest micro-batch itself) between a line landing in the spool
-        and its emission, instead of ``follow_iter``'s two (ingest
-        trigger + follow poll).  The reference's design point is a 1 s
-        follow poll (logger.rs:287-288); this path is bounded by the
-        ingest trigger alone.
+        and its emission, instead of an ingest trigger plus a follow
+        poll.  The reference's design point is a 1 s follow poll
+        (logger.rs:287-288); this path is bounded by the ingest
+        trigger alone.
 
-        Seam exactness (same contract as the ``follow_iter`` pin):
+        Seam exactness (the contract ``follow_tail`` also keeps):
         the subscription registers BEFORE the history snapshot is
         read, so a batch committing at any point lands either inside
         the snapshot (≤ its high-water, filtered out of the live queue
@@ -416,17 +416,6 @@ class Engine:
             for off in range(0, t.num_rows, FW.FOLLOW_EMIT_BATCH):
                 yield R.rows_of(t.slice(off, FW.FOLLOW_EMIT_BATCH),
                                 container_id)
-
-    def follow(self, container_id: str, since: str | None = None,
-               tail: int | None = None, poll_interval_s: float = 1.0,
-               max_idle_polls: int = FW.FOLLOW_COUNTER_MAX,
-               stop=None):
-        """ReadLogs with Follow=true: history then live batches."""
-        return FW.follow_iter(
-            self.logs_df, container_id, since=since, tail=tail,
-            poll_interval_s=poll_interval_s, max_idle_polls=max_idle_polls,
-            stop=stop,
-        )
 
     def follow_tail(self, container_id: str, since: str | None = None,
                     tail: int | None = None,

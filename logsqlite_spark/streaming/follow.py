@@ -1,122 +1,15 @@
-"""Follow mode — ``docker logs -f`` (T1; /root/reference/src/logger.rs:287-288, 395-455).
+"""Follow mode constants — ``docker logs -f`` (T1; reference logger.rs:287-288, 395-455).
 
 Reference behavior: stream history, then poll for new rows every 1 s
 (``FOLLOW_WAKETIME``), give up after 3600 idle polls
 (``FOLLOW_COUNTER_MAX``); the tail cap is disabled while following
 (logger.rs:386).
 
-Two implementations:
-
-- ``follow_iter`` — the reference's own design re-expressed: a cursor
-  (``seq`` high-water) poll loop. Each poll is a *batch* DataFrame
-  query whose ``seq >= cursor`` + partition predicates prune to the
-  newest files; history (since/until/tail) is served by the first
-  poll. This is the deterministic, testable path, and each poll is a
-  distributed job — only the emit is driver-side.
-- ``follow_stream`` — Structured Streaming native: ``readStream`` over
-  the logs directory with ``foreachBatch`` emit; the checkpoint is the
-  cursor. Poll interval == trigger interval.
+The follow implementations live on the engine: ``Engine.follow_tail``
+(driver-side spool tail; the HTTP route and CLI ``read --follow``) and
+``Engine.follow_live`` (rows pushed by the ingest commit hook).
 """
-
-from __future__ import annotations
-
-import time
-from typing import Callable, Iterator
-
-from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
-
-from logsqlite_spark.operators.read import read_logs
-from logsqlite_spark.schema import LOGS_SCHEMA
 
 FOLLOW_WAKETIME_S = 1.0
 FOLLOW_COUNTER_MAX = 3600
 FOLLOW_EMIT_BATCH = 10_000  # rows per yielded chunk during catch-up
-
-def follow_iter(
-    get_logs: Callable[[], DataFrame],
-    container_id: str,
-    since: str | None = None,
-    until: str | None = None,
-    tail: int | None = None,
-    poll_interval_s: float = FOLLOW_WAKETIME_S,
-    max_idle_polls: int = FOLLOW_COUNTER_MAX,
-    stop: Callable[[], bool] | None = None,
-) -> Iterator[list[Row]]:
-    """Yield batches of new rows for a container until idle-timeout.
-
-    ``get_logs`` re-reads the logs table each poll (new parquet files
-    must become visible, so the DataFrame is rebuilt per poll).
-    First poll serves history with the tail cap; afterwards the cap is
-    dropped (logger.rs:386) and the cursor advances past everything
-    emitted.
-    """
-    cursor = None
-    idle = 0
-    first = True
-    while idle < max_idle_polls and not (stop and stop()):
-        df = read_logs(
-            get_logs(),
-            container_id=container_id,
-            since=since if first else None,
-            until=until,
-            tail=tail if first else None,
-            cursor=cursor,
-        )
-        # toLocalIterator: one partition in driver memory at a time —
-        # a poll that catches up over a large backlog (first poll after
-        # a long-down client) never materializes it all at once. The
-        # wire path (operators/wire.py) has the same discipline.
-        emitted = False
-        rows: list[Row] = []
-        for row in df.toLocalIterator():
-            rows.append(row)
-            if len(rows) >= FOLLOW_EMIT_BATCH:
-                yield rows
-                cursor = rows[-1]["seq"] + 1
-                emitted = True
-                rows = []
-        if rows:
-            yield rows
-            cursor = rows[-1]["seq"] + 1
-            emitted = True
-        if emitted:
-            idle = 0
-        else:
-            idle += 1
-            time.sleep(poll_interval_s)
-        first = False
-
-def follow_stream(
-    spark: SparkSession,
-    logs_dir: str,
-    on_batch: Callable[[DataFrame, int], None],
-    container_id: str | None = None,
-    checkpoint_dir: str | None = None,
-    poll_interval_ms: int = 1000,
-    query_name: str = "logsqlite-follow",
-):
-    """Streaming-native follow over the logs table.
-
-    The parquet file source needs an explicit schema; the container
-    predicate prunes partition directories at listing time.
-    """
-    stream = (
-        spark.readStream.schema(LOGS_SCHEMA)
-        .option("maxFilesPerTrigger", "512")
-        .parquet(logs_dir)
-    )
-    if container_id is not None:
-        stream = stream.filter(F.col("container_id") == container_id)
-
-    def emit(df: DataFrame, batch_id: int) -> None:
-        on_batch(df.orderBy("seq"), batch_id)
-
-    writer = (
-        stream.writeStream.foreachBatch(emit)
-        .queryName(query_name)
-        .trigger(processingTime=f"{poll_interval_ms} milliseconds")
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()

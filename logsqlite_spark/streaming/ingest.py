@@ -21,6 +21,12 @@ any two steps leaves only unreferenced staging files; replaying the
 micro-batch (same epoch id) is detected inside the commit and skipped,
 so plain parquet never degrades to at-least-once.
 
+One commit path: every caller — a pull (scoped or multi-container), a
+scoped stream, the multiplexed stream — hands its decoded batch to
+``_write_batch``, which commits it in ONE Spark job: the staged write
+carries an ``Observation`` of the counts and paths the commit needs,
+and the per-container seq increments come from the staged footers.
+
 Scale: the shuffle per micro-batch is one hash partition by
 container_id (bounded by batch size, not table size); the parquet
 append is partitioned (container_id, date) so downstream queries prune.
@@ -30,17 +36,17 @@ windows are per-container and AQE splits skew.
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from logsqlite_spark.config import LogConfig
 from logsqlite_spark.sources.spool import read_spool_batch, read_spool_stream
-from logsqlite_spark.table import ManifestTable, open_table
+from logsqlite_spark.table import open_table, unescape_partition_value
 
 DECODE_ERROR_SOURCE = "__decode_error__"
 
@@ -55,9 +61,7 @@ DECODE_ERROR_SOURCE = "__decode_error__"
 # after a fully-successful write job into a per-batch unique staging
 # dir, and a failed job's staging dir is discarded wholesale, never
 # adopted (the crash-safety soaks exercise exactly this seam).
-# Env-tunable for deployments whose object store needs a different
-# committer entirely.
-_COMMITTER_ALGO = os.environ.get("SPARK_GRAFT_COMMITTER_ALGO", "2")
+_COMMITTER_ALGO = "2"
 
 
 def _staged_parquet_write(df: DataFrame, staging,
@@ -156,34 +160,35 @@ def _write_batch(batch_df: DataFrame, logs_dir: str, state_dir: str,
                  scope: str, batch_id: int | None,
                  max_records_per_file: int,
                  on_stale: str = "quarantine",
-                 single_container: str | None = None,
                  listing: list[str] | None = None) -> dict:
     """Assign seq and append one (micro-)batch; returns progress info.
+
+    The one commit path: pulls (scoped or multi-container), scoped
+    streams and the multiplexed stream all commit here, in ONE Spark
+    job.  Decode → seq → staged write runs once, with an
+    ``Observation`` riding the write that counts decode errors, good
+    rows and stale rows and collects the set of (path, stale) pairs
+    the batch read.  Everything else the commit needs is driver
+    arithmetic:
+
+    - seq increments: per-container row counts from the staged
+      parquet FOOTERS — exact by construction (they count precisely
+      the rows the commit publishes, immune to task-retry double
+      counting);
+    - file watermark: per container, the largest LIVE path any row
+      came from (the container id is the path's parent directory, as
+      the decode derives it);
+    - ``listing``: the exact spool file list a pull read, used only
+      by the read-coverage guard below.
 
     The append is exactly-once: rows land in the table's staging dir,
     get adopted (moved, still unreferenced), and become visible in ONE
     manifest commit together with the seq high-water, spool watermark,
     and batch id. Replays abort inside the commit's critical section,
-    so a crash at any point here never duplicates rows.
-
-    ``single_container``: the container a SCOPED stream is pinned to
-    (start_ingest_stream(container_id=...)).  The per-container stats
-    the commit needs (file watermark, good/error/stale counts) then
-    degenerate to GLOBAL aggregates, so they ride the write job as
-    ``Observation`` metrics instead of a separate aggregation job —
-    one Spark job per micro-batch instead of two.  Halving per-batch
-    fixed cost is what bounds ingest→follow-visible latency (the
-    reference's 1 s poll design point, logger.rs:287-288), and at
-    cluster scale it halves driver job-scheduling load per trigger.
-
-    ``listing`` (round 13): the exact spool file list a BATCH pull
-    read (``ingest_spool_once`` lists the spool on the driver anyway).
-    With it, the multi-container pull also commits in ONE job: the
-    per-container file watermark comes from the listing itself and
-    the per-container row counts from the staged parquet footers, so
-    the separate per-container stats aggregation (and the 100k-row
-    cache it required) disappears.  The multiplexed STREAM keeps the
-    grouped-stats path — its micro-batch has no driver listing.
+    so a crash at any point here never duplicates rows.  Every guard
+    that fails aborts before the commit: nothing is consumed, no
+    watermark moves, and the next pull (or the replayed micro-batch)
+    retries the same files.
     """
     table = open_table(logs_dir)
     st = table.import_existing()  # no-op once the manifest exists
@@ -203,95 +208,99 @@ def _write_batch(batch_df: DataFrame, logs_dir: str, state_dir: str,
     # (``consume=False`` batch re-pulls).
     # Hot-path guard: the common case (fresh table, or a steady stream
     # whose files are always new) has an EMPTY watermark map — skip the
-    # __stale column entirely there so the per-row condition, the extra
-    # aggregate, and the live-row filters never enter the plan. The
-    # quarantine machinery only costs when there is a watermark to
-    # violate.
+    # __stale column entirely there: the flag is a literal false, which
+    # Catalyst folds out of the aggregates and the live-row filter.
     last_file = {cid: _norm_path(v)
                  for cid, v in st.get("last_file", {}).items()}
-    track_stale = bool(last_file)
-    if track_stale:
+    if last_file:
         pairs = []
         for cid, name in last_file.items():
             pairs += [F.lit(cid), F.lit(name)]
         lf_col = F.element_at(F.create_map(*pairs), F.col("container_id"))
-        stale_cond = lf_col.isNotNull() & (F.col("path") <= lf_col)
-        batch_df = batch_df.withColumn("__stale", stale_cond)
-        not_stale = ~F.col("__stale")
+        batch_df = batch_df.withColumn(
+            "__stale", lf_col.isNotNull() & (F.col("path") <= lf_col))
+        stale = F.col("__stale")
     else:
-        not_stale = F.lit(True)
+        stale = F.lit(False)
+    live = ~stale
+    is_err = F.col("source") == DECODE_ERROR_SOURCE
 
-    if single_container is not None:
-        return _write_batch_observed(
-            batch_df, table, st, state_dir, scope, batch_id,
-            max_records_per_file, on_stale, single_container,
-            track_stale, not_stale)
-    if listing is not None:
-        return _write_batch_listed(
-            batch_df, table, st, state_dir, scope, batch_id,
-            max_records_per_file, on_stale, listing, last_file,
-            track_stale, not_stale)
-    return _write_batch_grouped(
-        batch_df, table, st, state_dir, scope, batch_id,
-        max_records_per_file, on_stale, track_stale, not_stale)
-
-
-def _write_batch_grouped(batch_df: DataFrame, table: ManifestTable,
-                         st: dict, state_dir: str, scope: str,
-                         batch_id: int | None,
-                         max_records_per_file: int, on_stale: str,
-                         track_stale, not_stale) -> dict:
-    """TWO-JOB commit for a multiplexed STREAMING micro-batch (no
-    driver listing exists): one per-container stats aggregation over
-    the persisted decode, then the write from cache."""
-    batch_df = batch_df.persist()
+    # the path set is O(files-per-batch) on the driver: pulls hand at
+    # most ``max_files_per_pull`` files, streams at most what one
+    # trigger admits (maxBytesPerTrigger)
+    aggs = [F.sum((is_err & live).cast("long")).alias("e"),
+            F.sum((~is_err & live).cast("long")).alias("n"),
+            F.sum(stale.cast("long")).alias("st"),
+            F.collect_set(F.struct(F.col("path"), stale.alias("stale")))
+            .alias("paths")]
+    obs = Observation()
+    staging = table.new_staging_dir()
     try:
-        # ONE stats job over the raw batch: per-container file watermark
-        # + decode-error / good-row / stale-row counts (one row per
-        # container, not per record). ``seq`` is a dense per-container
-        # row_number on top of the high-water mark, so max(seq) after
-        # the write is just high_water + n_good — no second aggregation
-        # job needed. Watermark and counts consider live rows only.
-        good = (F.col("source") != DECODE_ERROR_SOURCE).cast("long")
-        if track_stale:
-            live = not_stale.cast("long")
-            aggs = [
-                F.max(F.when(not_stale, F.col("path"))).alias("f"),
-                F.sum(live - good * live).alias("e"),
-                F.sum(good * live).alias("n"),
-                F.sum(1 - live).alias("st"),
-            ]
-        else:
-            aggs = [
-                F.max("path").alias("f"),
-                F.sum(1 - good).alias("e"),
-                F.sum(good).alias("n"),
-                F.lit(0).alias("st"),
-            ]
-        stats = batch_df.groupBy("container_id").agg(*aggs).collect()
-        if not stats:
+        _staged_parquet_write(
+            assign_seq(batch_df.observe(obs, *aggs).filter(live),
+                       st["high_water"]),
+            staging, max_records_per_file)
+        row = _obs_or_agg(obs, batch_df, aggs)
+        n_errors = int(row["e"] or 0)
+        n_good = int(row["n"] or 0)
+        n_stale = int(row["st"] or 0)
+        paths = [(p["path"], bool(p["stale"])) for p in row["paths"] or []]
+
+        # READ-COVERAGE GUARD (round-14 soak finding): a pull consumes
+        # its whole listing after the commit, so every listed file must
+        # have been read.  A nonempty spool file always decodes to >= 1
+        # row (error sentinel included), so a listed nonempty file
+        # absent from the rows' path set means the read dropped it:
+        # committing would turn that into SILENT PERMANENT loss
+        # (observed once under the kill soak).  Runs before the
+        # empty-batch return, so a read that saw nothing of a nonempty
+        # listing aborts too.
+        if listing is not None:
+            seen = {p for p, _ in paths}
+            uncovered = [p for p in listing if p not in seen
+                         and os.path.exists(p) and os.path.getsize(p) > 0
+                         and not _is_blank_spool_file(p)]
+            if uncovered:
+                raise RuntimeError(
+                    "listed spool files missing from the batch read "
+                    f"({len(uncovered)}/{len(listing)}): {uncovered[:5]}"
+                    " — aborting the commit so no watermark advances "
+                    "past unread data; the next pull retries them")
+        if not (n_errors or n_good or n_stale):
+            # empty batch: no commit, no batch-id consumption
             return {"rows": 0, "decode_errors": 0, "batch_id": batch_id}
-        top_files = {r["container_id"]: r["f"] for r in stats
-                     if r["f"] is not None}
-        n_errors = sum(r["e"] for r in stats)
-        n_stale = sum(r["st"] for r in stats)
+
+        increments: dict[str, int] = {}
+        for f in staging.rglob("*.parquet"):
+            # staged dirs carry Spark's Hive-escaped cid (':' -> %3A …);
+            # watermark keys must be the RAW cid assign_seq looks up
+            part = f.relative_to(staging).parts[0]
+            cid = unescape_partition_value(part.split("=", 1)[1])
+            increments[cid] = increments.get(cid, 0) + _parquet_num_rows(
+                str(f))
+        increments = {c: n for c, n in increments.items() if n}
+        n_rows = sum(increments.values())
+        # WRITE-COVERAGE GUARD (same soak finding, other side): if the
+        # write persisted fewer rows than the read produced, committing
+        # would lose the difference silently.
+        if n_rows != n_good:
+            raise RuntimeError(
+                f"staged parquet rows ({n_rows}) != rows read "
+                f"({n_good}) — aborting the commit")
+
         # Quarantine writes go through the staged-rename helper, NOT a
-        # direct .mode("append") into the shared dir (round-15 stream-
-        # soak finding, caught at cycle 37): two concurrent streams
-        # (the plog and jsonl mux queries) appending into the same
-        # path share Hadoop's job-staging dir `<dir>/_temporary/0` —
-        # whichever job commits first recursively deletes it and the
-        # other dies on FileNotFoundException mid-write.  The helper
-        # stages under a per-call `_inflight-<uuid>` dir (isolated
-        # `_temporary`) and renames files in with unique names; its
-        # count guard is exact here because the grouped batch is
-        # persisted (the quarantine re-read serves from cache).
+        # direct .mode("append") into the shared dir (round-15
+        # stream-soak finding): two concurrent streams appending into
+        # the same path share Hadoop's job-staging dir
+        # `<dir>/_temporary/0`, and whichever job commits first deletes
+        # it under the other.  Each re-scans the batch and is
+        # count-verified against the write job.
         if n_stale and on_stale == "quarantine":
             _quarantine_write(
-                batch_df.filter(F.col("__stale"))
+                batch_df.filter(stale)
                 .select("path", "container_id", "frame_no", "source",
                         "time_nano", "line"),
-                str(Path(state_dir) / "out_of_order"), int(n_stale),
+                str(Path(state_dir) / "out_of_order"), n_stale,
                 "out-of-order")
         if n_errors:
             # T4 policy: corrupt frames never poison the stream — the
@@ -299,138 +308,27 @@ def _write_batch_grouped(batch_df: DataFrame, table: ManifestTable,
             # frame, like the reference restarting on DecodeError), and
             # the error row is quarantined for ops visibility.
             _quarantine_write(
-                batch_df.filter((F.col("source") == DECODE_ERROR_SOURCE)
-                                & not_stale)
+                batch_df.filter(is_err & live)
                 .select("path", "container_id", "line"),
-                str(Path(state_dir) / "decode_errors"), int(n_errors),
+                str(Path(state_dir) / "decode_errors"), n_errors,
                 "decode-error")
-        increments = {r["container_id"]: int(r["n"]) for r in stats if r["n"]}
-        n_rows = sum(increments.values())
-        new_files: list[str] = []
-        if n_rows:
-            staging = table.new_staging_dir()
-            live_df = batch_df.filter(not_stale) if track_stale else batch_df
-            _staged_parquet_write(assign_seq(live_df, st["high_water"]),
-                                  staging, max_records_per_file)
-            new_files = table.adopt_staged(staging)
-            staged_n = sum(_parquet_num_rows(str(table.dir / f))
-                           for f in new_files)
-            if staged_n != n_rows:
-                # stats job and write job read the persisted batch, so
-                # they can only diverge under cache eviction+recompute
-                # — abort rather than commit counts the data does not
-                # back (adopted files unreferenced; gc reclaims)
-                raise RuntimeError(
-                    f"staged parquet rows ({staged_n}) != stats rows "
-                    f"({n_rows}) — aborting the commit")
-        committed = table.commit_append(new_files, scope, batch_id,
-                                        increments, top_files)
-        if committed is None:  # concurrent replay won the commit
-            return {"skipped_replay": True, "batch_id": batch_id}
-        return {
-            "rows": int(n_rows),
-            "decode_errors": int(n_errors),
-            "out_of_order_rows": int(n_stale) if on_stale == "quarantine" else 0,
-            "batch_id": batch_id,
-            "high_water": dict(committed["high_water"]),
-            "new_files": new_files,
-        }
+        new_files = table.adopt_staged(staging)
     finally:
-        batch_df.unpersist()
-
-
-def _write_batch_observed(batch_df: DataFrame, table: ManifestTable,
-                          st: dict, state_dir: str, scope: str,
-                          batch_id: int | None,
-                          max_records_per_file: int, on_stale: str,
-                          cid: str, track_stale, not_stale) -> dict:
-    """ONE-JOB commit for a single-container-scoped batch: the
-    per-container stats `_write_batch` needs are global aggregates
-    here, so they ride the write job as ``Observation`` metrics — the
-    decode runs exactly once, inside the write.  The rare quarantine
-    paths (decode errors / stale files) re-scan the batch instead of
-    keeping it persisted: the happy path owes them nothing.
-    Semantics are pinned identical to the grouped path in
-    ``tests/test_ingest.py`` (same manifest commit shape, same
-    watermark/counter math, exactly-once replay skip)."""
-    import shutil
-
-    from pyspark.sql import Observation
-
-    is_err = F.col("source") == DECODE_ERROR_SOURCE
-    good = (~is_err).cast("long")
-    # contract guard (round-13 ADVICE): a scoped stream must only see
-    # its own container's rows — a mis-scoped spool dir would silently
-    # corrupt ANOTHER container's high_water/last_file here, so count
-    # foreign rows in the same ride-along and fall back to the grouped
-    # per-container path when any appear.
-    foreign = (F.col("container_id") != F.lit(cid)).cast("long")
-    if track_stale:
-        live = not_stale.cast("long")
-        aggs = [
-            F.max(F.when(not_stale, F.col("path"))).alias("f"),
-            F.sum(live - good * live).alias("e"),
-            F.sum(good * live).alias("n"),
-            F.sum(1 - live).alias("st"),
-            F.sum(foreign).alias("x"),
-        ]
-    else:
-        aggs = [
-            F.max("path").alias("f"),
-            F.sum(1 - good).alias("e"),
-            F.sum(good).alias("n"),
-            F.sum(F.lit(0)).alias("st"),
-            F.sum(foreign).alias("x"),
-        ]
-    obs = Observation()
-    observed = batch_df.observe(obs, *aggs)
-    live_df = observed.filter(not_stale) if track_stale else observed
-    staging = table.new_staging_dir()
-    _staged_parquet_write(assign_seq(live_df, st["high_water"]),
-                          staging, max_records_per_file)
-    row = _obs_or_agg(obs, batch_df, aggs)
-    if int(row["x"] or 0):
-        # foreign-container rows: the single-container contract is
-        # broken — discard this attempt's staging and recompute with
-        # exact per-container stats (correct, just two jobs)
+        # every abort above leaves nothing in the table's data tree
         shutil.rmtree(staging, ignore_errors=True)
-        return _write_batch_grouped(
-            batch_df, table, st, state_dir, scope, batch_id,
-            max_records_per_file, on_stale, track_stale, not_stale)
-    top_file = row["f"]
-    n_errors = int(row["e"] or 0)
-    n_rows = int(row["n"] or 0)
-    n_stale = int(row["st"] or 0)
-    if top_file is None and not (n_rows or n_errors or n_stale):
-        # empty batch: mirror the grouped path's early return — no
-        # commit, no batch-id consumption, no orphan staging dir
-        shutil.rmtree(staging, ignore_errors=True)
-        return {"rows": 0, "decode_errors": 0, "batch_id": batch_id}
-    if n_stale and on_stale == "quarantine":
-        _quarantine_write(
-            batch_df.filter(F.col("__stale"))
-            .select("path", "container_id", "frame_no", "source",
-                    "time_nano", "line"),
-            str(Path(state_dir) / "out_of_order"), n_stale,
-            "out-of-order")
-    if n_errors:
-        _quarantine_write(
-            batch_df.filter((F.col("source") == DECODE_ERROR_SOURCE)
-                            & not_stale)
-            .select("path", "container_id", "line"),
-            str(Path(state_dir) / "decode_errors"), n_errors,
-            "decode-error")
-    new_files = table.adopt_staged(staging)
-    increments = {cid: n_rows} if n_rows else {}
-    top_files = {cid: top_file} if top_file is not None else {}
+    top_files: dict[str, str] = {}
+    for p, is_stale in paths:
+        cid = os.path.basename(os.path.dirname(p))
+        if not is_stale and p > top_files.get(cid, ""):
+            top_files[cid] = p
     committed = table.commit_append(new_files, scope, batch_id,
                                     increments, top_files)
     if committed is None:  # concurrent replay won the commit
         return {"skipped_replay": True, "batch_id": batch_id}
     return {
-        "rows": int(n_rows),
-        "decode_errors": int(n_errors),
-        "out_of_order_rows": int(n_stale) if on_stale == "quarantine" else 0,
+        "rows": n_rows,
+        "decode_errors": n_errors,
+        "out_of_order_rows": n_stale if on_stale == "quarantine" else 0,
         "batch_id": batch_id,
         "high_water": dict(committed["high_water"]),
         "new_files": new_files,
@@ -458,10 +356,7 @@ def _quarantine_write(df: DataFrame, outdir: str, expected: int,
     observation instead would be exact-by-construction but unbounded
     driver memory under a corrupt-flood (one error row per garbage
     jsonl line); this stays distributed and O(1) on the driver."""
-    import shutil
     import uuid
-
-    from pyspark.sql import Observation
 
     tmp = os.path.join(outdir, f"_inflight-{uuid.uuid4().hex}")
     obs = Observation()
@@ -480,154 +375,6 @@ def _quarantine_write(df: DataFrame, outdir: str, expected: int,
             os.rename(os.path.join(tmp, name),
                       os.path.join(outdir, f"{uuid.uuid4().hex}-{name}"))
     shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _write_batch_listed(batch_df: DataFrame, table: ManifestTable,
-                        st: dict, state_dir: str, scope: str,
-                        batch_id: int | None,
-                        max_records_per_file: int, on_stale: str,
-                        listing: list[str], last_file: dict[str, str],
-                        track_stale, not_stale) -> dict:
-    """ONE-JOB commit for a multi-container BATCH pull (round 13).
-
-    The grouped path's per-container stats job existed to learn three
-    things the commit needs; with the driver's own spool listing in
-    hand, none of them needs a Spark aggregation:
-
-    - per-container FILE WATERMARK: the max live (non-stale, nonempty)
-      listed path per container — pure driver arithmetic (a nonempty
-      spool file always decodes to >= 1 row, counting the error
-      sentinel, so this matches the grouped path's max-over-rows);
-    - per-container ROW COUNTS (seq increments): the staged parquet
-      FOOTERS, read driver-side after the write — exact by
-      construction (they count precisely the rows the commit
-      publishes, immune to task-retry double counting);
-    - global error/stale counts: ``Observation`` metrics riding the
-      write job.  The rare quarantine writes re-scan the batch, but
-      each re-scan is count-verified against the first execution and
-      any divergence aborts the commit (see ``_quarantine_write`` —
-      the round-14 soak caught executions of the same pull reading
-      different bytes from a fresh spool file).
-
-    Net: decode → seq → write → commit is one Spark job with no
-    batch-sized cache; at cluster scale that removes a full
-    batch-size persist and a scheduling round-trip per pull.
-    """
-    from pyspark.sql import Observation
-
-    is_err = F.col("source") == DECODE_ERROR_SOURCE
-    good = (~is_err).cast("long")
-    # the paths_seen set is O(files-per-batch) on the driver; bounded
-    # by construction because every caller hands a listing capped at
-    # ``max_files_per_pull`` entries (ingest_spool_once chunks any
-    # larger backlog into sequential commits) — VERDICT r14 #5
-    if track_stale:
-        live = not_stale.cast("long")
-        aggs = [F.sum(live - good * live).alias("e"),
-                F.sum(1 - live).alias("st"),
-                F.sum(good * live).alias("n"),
-                F.collect_set("path").alias("paths_seen")]
-    else:
-        aggs = [F.sum(1 - good).alias("e"),
-                F.sum(F.lit(0)).alias("st"),
-                F.sum(good).alias("n"),
-                F.collect_set("path").alias("paths_seen")]
-    obs = Observation()
-    observed = batch_df.observe(obs, *aggs)
-    live_df = observed.filter(not_stale) if track_stale else observed
-    staging = table.new_staging_dir()
-    _staged_parquet_write(assign_seq(live_df, st["high_water"]),
-                          staging, max_records_per_file)
-    row = _obs_or_agg(obs, batch_df, aggs)
-    n_errors = int(row["e"] or 0)
-    n_stale = int(row["st"] or 0)
-    # READ-COVERAGE GUARD (round 14, soak finding): this path derives
-    # the file watermark from the driver's own LISTING — which is only
-    # sound if the Spark read actually covered every listed file.  A
-    # nonempty spool file always decodes to >= 1 row (error sentinel
-    # included), so a listed nonempty file absent from the rows' path
-    # set means the read dropped it: advancing the watermark would
-    # turn that into SILENT PERMANENT loss (observed once under the
-    # kill soak: watermark past 2.5 files whose rows never committed).
-    # Abort loudly instead — staging is unreferenced, nothing is
-    # consumed, and the next pull retries the same files.
-    seen = set(row["paths_seen"] or [])
-    uncovered = [p for p in listing if p not in seen
-                 and os.path.exists(p) and os.path.getsize(p) > 0
-                 and not _is_blank_spool_file(p)]
-    if uncovered:
-        import shutil
-
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(
-            "listed spool files missing from the batch read "
-            f"({len(uncovered)}/{len(listing)}): {uncovered[:5]} — "
-            "aborting the commit so no watermark advances past "
-            "unread data; the next pull retries them")
-    if n_stale and on_stale == "quarantine":
-        _quarantine_write(
-            batch_df.filter(F.col("__stale"))
-            .select("path", "container_id", "frame_no", "source",
-                    "time_nano", "line"),
-            str(Path(state_dir) / "out_of_order"), n_stale,
-            "out-of-order")
-    if n_errors:
-        _quarantine_write(
-            batch_df.filter((F.col("source") == DECODE_ERROR_SOURCE)
-                            & not_stale)
-            .select("path", "container_id", "line"),
-            str(Path(state_dir) / "decode_errors"), n_errors,
-            "decode-error")
-    new_files = table.adopt_staged(staging)
-    from logsqlite_spark.table import unescape_partition_value
-
-    increments: dict[str, int] = {}
-    for f in new_files:
-        # staged dirs carry Spark's Hive-escaped cid (':' -> %3A …);
-        # watermark keys must be the RAW cid assign_seq looks up
-        cid = unescape_partition_value(f.split("/", 1)[0].split("=", 1)[1])
-        n = _parquet_num_rows(str(table.dir / f))
-        increments[cid] = increments.get(cid, 0) + n
-    increments = {c: n for c, n in increments.items() if n}
-    n_rows = sum(increments.values())
-    # WRITE-COVERAGE GUARD (same soak finding, other side): the seq
-    # increments come from the staged parquet footers; if the write
-    # persisted fewer rows than the read produced, committing would
-    # lose the difference silently.
-    if n_rows != int(row["n"] or 0):
-        # files are already adopted but UNREFERENCED (no commit) —
-        # gc reclaims them; nothing is consumed, the next pull retries
-        raise RuntimeError(
-            f"staged parquet rows ({n_rows}) != rows read "
-            f"({int(row['n'] or 0)}) — aborting the commit")
-    top_files: dict[str, str] = {}
-    for p in listing:
-        cid = os.path.basename(os.path.dirname(p))
-        if track_stale:
-            lf = last_file.get(cid)
-            if lf is not None and p <= lf:
-                continue  # stale file: never advances the watermark
-        try:
-            if os.path.getsize(p) == 0:
-                continue  # zero rows decoded: grouped path wouldn't see it
-        except OSError:
-            continue
-        if cid not in top_files or p > top_files[cid]:
-            top_files[cid] = p
-    if not (n_rows or n_errors or n_stale):
-        return {"rows": 0, "decode_errors": 0, "batch_id": batch_id}
-    committed = table.commit_append(new_files, scope, batch_id,
-                                    increments, top_files)
-    if committed is None:  # concurrent replay won the commit
-        return {"skipped_replay": True, "batch_id": batch_id}
-    return {
-        "rows": int(n_rows),
-        "decode_errors": int(n_errors),
-        "out_of_order_rows": int(n_stale) if on_stale == "quarantine" else 0,
-        "batch_id": batch_id,
-        "high_water": dict(committed["high_water"]),
-        "new_files": new_files,
-    }
 
 
 def _parquet_num_rows(path: str) -> int:
@@ -684,8 +431,8 @@ def ingest_spool_once(spark: SparkSession, spool_dir: str, logs_dir: str,
     batch.  Each chunk commits and (with ``consume``) deletes its
     files before the next starts, so a crash mid-backlog loses no
     progress, and every driver-side per-file structure — the listing
-    itself, the read-coverage guard's ``collect_set(path)``
-    observation, the staged-footer walk, the consume loop — is hard-
+    itself, the commit's observed path set, the staged-footer walk,
+    the consume loop — is hard-
     bounded at ``max_files_per_pull`` entries regardless of backlog
     size.  Files sort per-container within the global listing, so
     chunk boundaries preserve per-container arrival order and the
@@ -693,11 +440,11 @@ def ingest_spool_once(spark: SparkSession, spool_dir: str, logs_dir: str,
     """
     # List the spool on the driver (the spool is posix-visible by
     # nature — it's where the FIFO tailer writes) and hand the exact
-    # file list to Spark. One listing serves three jobs: the
+    # file list to Spark. One listing serves four jobs: the
     # empty-spool fast path (no Py4J PATH_NOT_FOUND stack spew), the
-    # read itself, and the post-commit consume deletion — files landing
-    # mid-ingest are simply left for the next pull, never deleted
-    # unread.
+    # read itself, the commit's read-coverage guard, and the
+    # post-commit consume deletion — files landing mid-ingest are
+    # simply left for the next pull, never deleted unread.
     import glob as _glob
 
     ext = "jsonl" if fmt == "jsonl" else "plog"
@@ -729,8 +476,7 @@ def ingest_spool_once(spark: SparkSession, spool_dir: str, logs_dir: str,
         res = _write_batch(decoded, logs_dir, state_dir, "__pull__", None,
                            max_records_per_file,
                            on_stale="quarantine" if consume else "drop",
-                           single_container=container_id,
-                           listing=chunk if container_id is None else None)
+                           listing=chunk)
         if consume:
             for fp in chunk:
                 if os.path.exists(fp):
@@ -810,8 +556,7 @@ def start_ingest_stream(
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         res = _write_batch(batch_df, logs_dir, state_dir, query_name,
                            batch_id,
-                           max_records_per_file=max(conf.max_lines_per_tx, 1),
-                           single_container=container_id)
+                           max_records_per_file=max(conf.max_lines_per_tx, 1))
         # Observed AFTER the manifest commit, so a policy hook (e.g.
         # T4 restart-on-decode-error) never sees an uncommitted batch.
         if on_batch_result is not None:

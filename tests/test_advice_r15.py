@@ -81,7 +81,7 @@ def test_escaped_spool_path_chars_pull(spark, tmp_path, fmt):
         w1.write_burst(_entries(BASE_TS, 3))
         w2.write_burst(_entries(BASE_TS, 2))
 
-    # multi-container pull -> the listed path (coverage guard) branch
+    # multi-container pull: the read-coverage guard checks its listing
     res = ingest_spool_once(spark, spool, logs, state, fmt=fmt)
     assert res["rows"] == 5 and res["decode_errors"] == 0
 

@@ -199,116 +199,170 @@ def test_streaming_restart_resumes_from_checkpoint(spark, warehouse):
     assert seqs == [1, 2, 3, 4, 5]  # no dups, no gaps across restart
 
 
-def test_observed_commit_equals_grouped_commit(spark, tmp_path):
-    """The single-container ONE-JOB commit path (round 12:
-    Observation-fused stats riding the write job) must be
-    semantically identical to the grouped-stats path — same rows,
-    same seqs, same manifest high-water/watermark state — including
-    with decode errors in the batch (the rare re-scan path)."""
+def _two_container_spool(cfg):
+    """ca: one good burst; cb: a file with a good frame then a garbage
+    tail (one row + one decode error), then a good burst."""
     from pathlib import Path
 
-    results = {}
-    for tag in ("grouped", "observed"):
-        cfg = EngineConfig(warehouse_dir=str(tmp_path / tag))
-        w = SpoolWriter(cfg.spool_dir, "c0")
-        w.write_burst(_entries(BASE_TS, 4))
-        # corrupt second file: good frame then garbage tail
-        good = encode_frame(LogEntry(source="stdout",
-                                     time_nano=BASE_TS + 10**10,
-                                     line=b"ok"))
-        bad_name = w.write_burst([])
-        Path(bad_name).write_bytes(good + b"\xff\xff\xff\xff garbage")
-        w.write_burst(_entries(BASE_TS + 2 * 10**10, 2))
-        res = ingest_spool_once(
-            spark, cfg.spool_dir, cfg.logs_dir, cfg.state_dir,
-            container_id="c0" if tag == "observed" else None)
-        rows = sorted(
-            (r["seq"], r["line"], r["ts_nanos"]) for r in
-            spark.read.parquet(cfg.logs_dir).collect())
-        from logsqlite_spark.table import ManifestTable
-        manifest = ManifestTable(cfg.logs_dir).manifest()
-        # spool names embed wall-clock ns — only the monotonic
-        # per-writer counter suffix is comparable across the two runs
-        wm = manifest.get("last_file", {}).get("c0", "")
-        results[tag] = (res["rows"], res["decode_errors"], rows,
-                        manifest.get("high_water"),
-                        wm.rsplit("-", 1)[-1])
-    g, o = results["grouped"], results["observed"]
-    # compare every component; file watermark compared by basename
-    assert o[:4] == g[:4]
-    assert o[4] == g[4]
+    wa = SpoolWriter(cfg.spool_dir, "ca")
+    wb = SpoolWriter(cfg.spool_dir, "cb")
+    wa.write_burst(_entries(BASE_TS, 4))
+    good = encode_frame(LogEntry(source="stdout",
+                                 time_nano=BASE_TS + 10**10, line=b"ok"))
+    bad_name = wb.write_burst([])
+    Path(bad_name).write_bytes(good + b"\xff\xff\xff\xff garbage")
+    wb.write_burst(_entries(BASE_TS + 2 * 10**10, 2))
+    return wa, wb
 
-def test_listed_commit_equals_grouped_commit(spark, tmp_path):
-    """Round-13: the LISTED one-job multi-container pull (watermark
-    from the driver listing, per-container counts from staged parquet
-    footers) must be semantically identical to the grouped-stats path
-    — same rows/seqs, same manifest state, same quarantine behavior —
-    including decode errors and a stale (watermark-violating) file in
-    a later pull."""
-    import glob as _glob
+
+def _stale_and_fresh(cfg, wa):
+    """Fresh rows for ca plus a misnamed file below ca's watermark,
+    published with tmp + rename like every spool writer."""
+    import os
     from pathlib import Path
 
-    from logsqlite_spark.sources.spool import read_spool_batch
-    from logsqlite_spark.streaming.ingest import _write_batch
+    wa.write_burst(_entries(BASE_TS + 3 * 10**10, 3))
+    tmp = Path(cfg.spool_dir) / "ca" / ".stale.tmp"
+    tmp.write_bytes(encode_frame(LogEntry(
+        source="stdout", time_nano=BASE_TS, line=b"misnamed")))
+    os.replace(tmp, tmp.with_name("00000000000000000000_0.plog"))
+
+
+def test_entry_points_commit_the_same_state(spark, tmp_path):
+    """Scoped pulls, a multi-container pull and the multiplexed stream
+    all commit through the one commit path: on the same spool —
+    decode errors in the first batch, a stale (watermark-violating)
+    file in the second — they produce the same rows, seqs, counters,
+    quarantine and manifest state."""
     from logsqlite_spark.table import ManifestTable
 
-    def pull(cfg, mode):
-        files = sorted(_glob.glob(f"{cfg.spool_dir}/*/*.plog"))
-        if not files:
-            return {"rows": 0}
-        decoded = read_spool_batch(spark, cfg.spool_dir, None, paths=files)
-        res = _write_batch(decoded, cfg.logs_dir, cfg.state_dir,
-                           "__pull__", None, 1_000_000,
-                           on_stale="quarantine",
-                           listing=files if mode == "listed" else None)
-        for fp in files:
-            import os as _os
-            if _os.path.exists(fp):
-                _os.remove(fp)
-        return res
+    def scoped(cfg):
+        out = []
+        for cid in ("ca", "cb"):
+            out.append(ingest_spool_once(spark, cfg.spool_dir, cfg.logs_dir,
+                                         cfg.state_dir, container_id=cid))
+        return out
+
+    def multi(cfg):
+        return [ingest_spool_once(spark, cfg.spool_dir, cfg.logs_dir,
+                                  cfg.state_dir)]
+
+    def run(cfg, pull):
+        wa, _ = _two_container_spool(cfg)
+        r1 = pull(cfg)
+        _stale_and_fresh(cfg, wa)
+        r2 = pull(cfg)
+        return r1, r2
+
+    def stream(cfg):
+        # the corrupt file is rewritten in place, so the stream starts
+        # only once the first spool is complete
+        wa, _ = _two_container_spool(cfg)
+        results = []
+        q = start_ingest_stream(
+            spark, cfg.spool_dir, cfg.logs_dir, cfg.state_dir,
+            cfg.checkpoints_dir + "/mux",
+            LogConfig(message_read_timeout_ms=100),
+            query_name="parity-mux", on_batch_result=results.append)
+        try:
+            q.processAllAvailable()
+            r1, results[:] = list(results), []
+            _stale_and_fresh(cfg, wa)
+            q.processAllAvailable()
+            return r1, list(results)
+        finally:
+            q.stop()
+            q.awaitTermination(30)
 
     results = {}
-    for mode in ("grouped", "listed"):
+    for mode in ("scoped", "multi", "stream"):
         cfg = EngineConfig(warehouse_dir=str(tmp_path / mode))
-        wa = SpoolWriter(cfg.spool_dir, "ca")
-        wb = SpoolWriter(cfg.spool_dir, "cb")
-        wa.write_burst(_entries(BASE_TS, 4))
-        good = encode_frame(LogEntry(source="stdout",
-                                     time_nano=BASE_TS + 10**10,
-                                     line=b"ok"))
-        bad_name = wb.write_burst([])
-        Path(bad_name).write_bytes(good + b"\xff\xff\xff\xff garbage")
-        wb.write_burst(_entries(BASE_TS + 2 * 10**10, 2))
-        r1 = pull(cfg, mode)
-        # second pull: fresh rows for ca + a misnamed (stale) file
-        wa.write_burst(_entries(BASE_TS + 3 * 10**10, 3))
-        stale = Path(cfg.spool_dir) / "ca" / "00000000000000000000_0.plog"
-        stale.write_bytes(encode_frame(LogEntry(
-            source="stdout", time_nano=BASE_TS, line=b"misnamed")))
-        r2 = pull(cfg, mode)
+        if mode == "stream":
+            r1, r2 = stream(cfg)
+        else:
+            r1, r2 = run(cfg, scoped if mode == "scoped" else multi)
+        counts = [tuple(sum(r.get(k, 0) for r in rs) for k in
+                        ("rows", "decode_errors", "out_of_order_rows"))
+                  for rs in (r1, r2)]
         rows = sorted(
             (r["container_id"], r["seq"], r["line"], r["ts_nanos"])
             for r in spark.read.parquet(cfg.logs_dir).collect())
         ooo = sorted(
             r["line"] for r in spark.read.parquet(
                 f"{cfg.state_dir}/out_of_order").collect())
+        errs = spark.read.parquet(f"{cfg.state_dir}/decode_errors").count()
         m = ManifestTable(cfg.logs_dir).manifest()
+        # spool names embed wall-clock ns — only the monotonic
+        # per-writer counter suffix is comparable across runs
         wm = {c: v.rsplit("-", 1)[-1]
               for c, v in m.get("last_file", {}).items()}
-        results[mode] = (
-            (r1["rows"], r1["decode_errors"], r1["out_of_order_rows"]),
-            (r2["rows"], r2["decode_errors"], r2["out_of_order_rows"]),
-            rows, ooo, m.get("high_water"), wm)
-    assert results["listed"] == results["grouped"]
-    assert results["listed"][4] == {"ca": 7, "cb": 3}
-    assert results["listed"][3] == ["misnamed\n"]
+        results[mode] = (counts, rows, ooo, errs, m.get("high_water"), wm)
+    assert results["scoped"] == results["multi"] == results["stream"]
+    counts, rows, ooo, errs, high_water, _ = results["multi"]
+    assert counts == [(7, 1, 0), (3, 0, 1)]
+    assert high_water == {"ca": 7, "cb": 3}
+    assert ooo == ["misnamed\n"]
+    assert errs == 1
+
+
+@pytest.mark.parametrize("scoped", [True, False], ids=["scoped", "multi"])
+def test_write_coverage_guard_aborts_undercounted_commit(
+        spark, warehouse, monkeypatch, scoped):
+    """The staged footers must back every good row the read produced:
+    a write that persisted fewer rows aborts the commit — for scoped
+    and multi-container pulls alike — with no watermark moved and the
+    spool files left for the next pull, which commits every row."""
+    import glob
+    import os
+
+    from logsqlite_spark.streaming import ingest as ING
+    from logsqlite_spark.table import ManifestTable
+
+    def pull():
+        return ingest_spool_once(spark, warehouse.spool_dir,
+                                 warehouse.logs_dir, warehouse.state_dir,
+                                 container_id="ca" if scoped else None)
+
+    wa = SpoolWriter(warehouse.spool_dir, "ca")
+    wb = SpoolWriter(warehouse.spool_dir, "cb")
+    wa.write_burst(_entries(BASE_TS, 2))
+    wb.write_burst(_entries(BASE_TS, 2))
+    ingest_spool_once(spark, warehouse.spool_dir, warehouse.logs_dir,
+                      warehouse.state_dir)
+    before = ManifestTable(warehouse.logs_dir).manifest()
+
+    wa.write_burst(_entries(BASE_TS + 10**11, 3))
+    wb.write_burst(_entries(BASE_TS + 10**11, 1))
+    pending = sorted(glob.glob(f"{warehouse.spool_dir}/*/*.plog"))
+    real = ING._parquet_num_rows
+    monkeypatch.setattr(ING, "_parquet_num_rows",
+                        lambda p: max(real(p) - 1, 0))
+    with pytest.raises(RuntimeError, match="staged parquet rows"):
+        pull()
+    after = ManifestTable(warehouse.logs_dir).manifest()
+    assert after["high_water"] == before["high_water"]
+    assert after["last_file"] == before["last_file"]
+    assert all(os.path.exists(p) for p in pending)
+
+    monkeypatch.setattr(ING, "_parquet_num_rows", real)
+    assert pull()["rows"] == (3 if scoped else 4)
+    want = {"ca": [1, 2, 3, 4, 5], "cb": [1, 2] if scoped else [1, 2, 3]}
+    # a raw read of the data tree: the aborted commit left no adopted
+    # files behind either
+    logs = spark.read.parquet(warehouse.logs_dir)
+    for cid, seqs in want.items():
+        assert sorted(r["seq"] for r in logs.filter(
+            F.col("container_id") == cid).collect()) == seqs
+    assert ManifestTable(warehouse.logs_dir).manifest()["high_water"] \
+        == {c: s[-1] for c, s in want.items()}
 
 
 def test_path_column_is_plain_filesystem_form(spark, warehouse):
     """Round-13: both decode sources emit ``path`` in the PLAIN
     filesystem form (no ``file:``/``file://`` URI spelling), matching
-    the driver's own listing — the listed pull derives the last_file
-    watermark from that listing, so the forms must be identical."""
+    the driver's own listing — a pull's read-coverage guard looks each
+    listed file up in the observed path set, so the forms must be
+    identical."""
     import glob as _glob
 
     from logsqlite_spark.sources.jsonl import (

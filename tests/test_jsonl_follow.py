@@ -1,4 +1,4 @@
-"""JSONL spool format + streaming-native follow mode."""
+"""JSONL spool format: writer, batch and streaming decode, ingest."""
 
 import time
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from logsqlite_spark.config import EngineConfig
 from logsqlite_spark.sources.jsonl import JsonlSpoolWriter
-from logsqlite_spark.streaming.follow import follow_stream
 from logsqlite_spark.streaming.ingest import ingest_spool_once
 
 BASE_TS = 1_704_067_200_000_000_000
@@ -73,36 +72,3 @@ def test_jsonl_decode_is_jvm_side(spark, warehouse):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "MapInPandas" not in plan
-
-def test_follow_stream_emits_batches(spark, warehouse):
-    from logsqlite_spark.sources.frames import LogEntry
-    from logsqlite_spark.sources.spool import SpoolWriter
-
-    w = SpoolWriter(warehouse.spool_dir, "cf")
-    w.write_burst([LogEntry(source="stdout", time_nano=BASE_TS + i * 10**9,
-                            line=f"f{i}".encode()) for i in range(3)])
-    ingest_spool_once(spark, warehouse.spool_dir, warehouse.logs_dir,
-                      warehouse.state_dir)
-
-    seen = []
-
-    def on_batch(df, batch_id):
-        seen.extend(r["seq"] for r in df.collect())
-
-    q = follow_stream(spark, warehouse.logs_dir, on_batch,
-                      container_id="cf",
-                      checkpoint_dir=warehouse.checkpoints_dir + "/follow")
-    try:
-        q.processAllAvailable()
-        assert seen == [1, 2, 3]
-        # live append while following
-        w2 = SpoolWriter(warehouse.spool_dir, "cf")
-        w2.write_burst([LogEntry(source="stdout", time_nano=BASE_TS + 10**11,
-                                 line=b"late")])
-        ingest_spool_once(spark, warehouse.spool_dir, warehouse.logs_dir,
-                          warehouse.state_dir)
-        q.processAllAvailable()
-        assert seen == [1, 2, 3, 4]
-    finally:
-        q.stop()
-        q.awaitTermination(30)

@@ -341,8 +341,8 @@ def test_decisions_served_while_following(spark, engine, server):
     followed: list[str] = []
 
     def _follow():
-        for rows in engine.follow("cdup", poll_interval_s=0.2,
-                                  max_idle_polls=50, stop=stop.is_set):
+        for rows in engine.follow_tail("cdup", poll_interval_s=0.2,
+                                       max_idle_polls=50, stop=stop.is_set):
             followed.extend(r["line"].rstrip("\n") for r in rows)
             if len(followed) >= len(burst1) + len(burst2):
                 break

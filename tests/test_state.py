@@ -104,24 +104,6 @@ def test_engine_sql_surface(engine):
                     "FROM active_streams")
     assert st.collect()[0]["d"] is False
 
-def test_engine_follow_sees_new_rows(engine):
-    engine.start_logging("cf", None, {"delete_when_stopped": "false"})
-    _burst(engine.config.spool_dir, "cf", 3)
-    engine.ingest_once()
-
-    batches = []
-    it = engine.follow("cf", tail=2, poll_interval_s=0.1, max_idle_polls=3)
-    batches.append(next(it))  # history with tail cap
-    assert [r["seq"] for r in batches[0]] == [2, 3]
-
-    _burst(engine.config.spool_dir, "cf", 2, ts=BASE_TS + 10**11)
-    engine.ingest_once()
-    batches.append(next(it))  # live rows past the cursor, cap dropped
-    assert [r["seq"] for r in batches[1]] == [4, 5]
-    # idle timeout ends iteration (reference FOLLOW_COUNTER_MAX)
-    assert list(it) == []
-
-
 def _wait(pred, timeout=60.0, every=0.5):
     import time
     deadline = time.time() + timeout
@@ -210,37 +192,6 @@ def test_t4_quarantine_policy_never_restarts(spark, tmp_path):
         eng.stop_all()
 
 
-def test_follow_seam_catchup_to_live_no_gap_no_dup(engine):
-    """The tail-catch-up -> live-stream handoff seam (VERDICT r11 #4,
-    SURVEY §7.2): rows landing BETWEEN iterator creation and the
-    first (history) poll must appear exactly once — either inside the
-    tail window or as the first live batch — and the cursor must hand
-    off at the seq high-water with no gap and no re-emission."""
-    engine.start_logging("cs", None, {"delete_when_stopped": "false"})
-    _burst(engine.config.spool_dir, "cs", 3)          # seqs 1..3
-    engine.ingest_once()
-
-    it = engine.follow("cs", tail=2, poll_interval_s=0.05,
-                       max_idle_polls=3)
-    # land new rows before the first poll reads: they are part of the
-    # table the history poll sees, so the tail window shifts onto them
-    _burst(engine.config.spool_dir, "cs", 2, ts=BASE_TS + 10**11)  # 4,5
-    engine.ingest_once()
-    first = [r["seq"] for r in next(it)]
-    assert first == [4, 5]  # tail=2 of the CURRENT high-water
-
-    # live rows strictly past the handoff cursor: exactly once, no gap
-    _burst(engine.config.spool_dir, "cs", 2, ts=BASE_TS + 2 * 10**11)  # 6,7
-    engine.ingest_once()
-    second = [r["seq"] for r in next(it)]
-    assert second == [6, 7]
-
-    emitted = first + second
-    assert len(emitted) == len(set(emitted))          # no dup
-    assert emitted == list(range(min(emitted), max(emitted) + 1))  # no gap
-    assert list(it) == []                             # idle timeout
-
-
 def test_cleaner_counts_and_reports_errors(engine, monkeypatch, capsys):
     """A failing cleaner pass is counted and printed as ``type:
     message`` on stderr, and the loop keeps running."""
@@ -265,7 +216,7 @@ def test_cleaner_counts_and_reports_errors(engine, monkeypatch, capsys):
 
 
 def test_follow_live_seam_catchup_to_live_no_gap_no_dup(engine):
-    """follow_live (round 13): same seam contract as follow_iter —
+    """follow_live (round 13): the follow seam contract —
     history from the snapshot, live rows pushed by the ingest commit
     hook; rows landing between iterator creation and the first read
     appear exactly once inside the (shifted) tail window, the live

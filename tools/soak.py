@@ -297,8 +297,9 @@ def run_victim(root: str, seed: int, cycle: int,
             time.sleep(rnd.uniform(0.02, 0.15))
 
     def ingest_loop_duo() -> None:
-        """Per-container SCOPED pulls (the single-container observed
-        path) — a duo engine must never pull the peer's spool dirs."""
+        """Per-container SCOPED pulls (``container_id=`` on the one
+        commit path) — a duo engine must never pull the peer's spool
+        dirs."""
         from logsqlite_spark.streaming.ingest import ingest_spool_once
         while True:
             for cid in mine:

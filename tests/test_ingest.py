@@ -228,81 +228,109 @@ def _stale_and_fresh(cfg, wa):
     os.replace(tmp, tmp.with_name("00000000000000000000_0.plog"))
 
 
-def test_entry_points_commit_the_same_state(spark, tmp_path):
-    """Scoped pulls, a multi-container pull and the multiplexed stream
-    all commit through the one commit path: on the same spool —
-    decode errors in the first batch, a stale (watermark-violating)
-    file in the second — they produce the same rows, seqs, counters,
-    quarantine and manifest state."""
+def _scoped_pulls(spark, cfg):
+    return [ingest_spool_once(spark, cfg.spool_dir, cfg.logs_dir,
+                              cfg.state_dir, container_id=cid)
+            for cid in ("ca", "cb")]
+
+
+def _multi_pull(spark, cfg):
+    return [ingest_spool_once(spark, cfg.spool_dir, cfg.logs_dir,
+                              cfg.state_dir)]
+
+
+def _pulled_twice(spark, cfg, pull):
+    wa, _ = _two_container_spool(cfg)
+    r1 = pull(spark, cfg)
+    _stale_and_fresh(cfg, wa)
+    r2 = pull(spark, cfg)
+    return r1, r2
+
+
+def _streamed_twice(spark, cfg):
+    # the corrupt file is rewritten in place, so the stream starts only
+    # once the first spool is complete
+    wa, _ = _two_container_spool(cfg)
+    results = []
+    q = start_ingest_stream(
+        spark, cfg.spool_dir, cfg.logs_dir, cfg.state_dir,
+        cfg.checkpoints_dir + "/mux",
+        LogConfig(message_read_timeout_ms=100),
+        query_name="parity-mux", on_batch_result=results.append)
+    try:
+        q.processAllAvailable()
+        r1, results[:] = list(results), []
+        _stale_and_fresh(cfg, wa)
+        q.processAllAvailable()
+        return r1, list(results)
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+
+
+def _committed_state(spark, cfg, r1, r2):
+    """Everything a commit leaves behind, in a form comparable across
+    warehouses: per-pass counters, rows with seqs, quarantine, manifest
+    high-water and per-container file watermark."""
     from logsqlite_spark.table import ManifestTable
 
-    def scoped(cfg):
-        out = []
-        for cid in ("ca", "cb"):
-            out.append(ingest_spool_once(spark, cfg.spool_dir, cfg.logs_dir,
-                                         cfg.state_dir, container_id=cid))
-        return out
+    counts = [tuple(sum(r.get(k, 0) for r in rs) for k in
+                    ("rows", "decode_errors", "out_of_order_rows"))
+              for rs in (r1, r2)]
+    rows = sorted(
+        (r["container_id"], r["seq"], r["line"], r["ts_nanos"])
+        for r in spark.read.parquet(cfg.logs_dir).collect())
+    ooo = sorted(
+        r["line"] for r in spark.read.parquet(
+            f"{cfg.state_dir}/out_of_order").collect())
+    errs = spark.read.parquet(f"{cfg.state_dir}/decode_errors").count()
+    m = ManifestTable(cfg.logs_dir).manifest()
+    # spool names embed wall-clock ns — only the monotonic per-writer
+    # counter suffix is comparable across runs
+    wm = {c: v.rsplit("-", 1)[-1]
+          for c, v in m.get("last_file", {}).items()}
+    return counts, rows, ooo, errs, m.get("high_water"), wm
 
-    def multi(cfg):
-        return [ingest_spool_once(spark, cfg.spool_dir, cfg.logs_dir,
-                                  cfg.state_dir)]
 
-    def run(cfg, pull):
-        wa, _ = _two_container_spool(cfg)
-        r1 = pull(cfg)
-        _stale_and_fresh(cfg, wa)
-        r2 = pull(cfg)
-        return r1, r2
-
-    def stream(cfg):
-        # the corrupt file is rewritten in place, so the stream starts
-        # only once the first spool is complete
-        wa, _ = _two_container_spool(cfg)
-        results = []
-        q = start_ingest_stream(
-            spark, cfg.spool_dir, cfg.logs_dir, cfg.state_dir,
-            cfg.checkpoints_dir + "/mux",
-            LogConfig(message_read_timeout_ms=100),
-            query_name="parity-mux", on_batch_result=results.append)
-        try:
-            q.processAllAvailable()
-            r1, results[:] = list(results), []
-            _stale_and_fresh(cfg, wa)
-            q.processAllAvailable()
-            return r1, list(results)
-        finally:
-            q.stop()
-            q.awaitTermination(30)
-
-    results = {}
-    for mode in ("scoped", "multi", "stream"):
-        cfg = EngineConfig(warehouse_dir=str(tmp_path / mode))
-        if mode == "stream":
-            r1, r2 = stream(cfg)
-        else:
-            r1, r2 = run(cfg, scoped if mode == "scoped" else multi)
-        counts = [tuple(sum(r.get(k, 0) for r in rs) for k in
-                        ("rows", "decode_errors", "out_of_order_rows"))
-                  for rs in (r1, r2)]
-        rows = sorted(
-            (r["container_id"], r["seq"], r["line"], r["ts_nanos"])
-            for r in spark.read.parquet(cfg.logs_dir).collect())
-        ooo = sorted(
-            r["line"] for r in spark.read.parquet(
-                f"{cfg.state_dir}/out_of_order").collect())
-        errs = spark.read.parquet(f"{cfg.state_dir}/decode_errors").count()
-        m = ManifestTable(cfg.logs_dir).manifest()
-        # spool names embed wall-clock ns — only the monotonic
-        # per-writer counter suffix is comparable across runs
-        wm = {c: v.rsplit("-", 1)[-1]
-              for c, v in m.get("last_file", {}).items()}
-        results[mode] = (counts, rows, ooo, errs, m.get("high_water"), wm)
-    assert results["scoped"] == results["multi"] == results["stream"]
-    counts, rows, ooo, errs, high_water, _ = results["multi"]
+def _assert_expected_state(state):
+    counts, _, ooo, errs, high_water, _ = state
     assert counts == [(7, 1, 0), (3, 0, 1)]
     assert high_water == {"ca": 7, "cb": 3}
     assert ooo == ["misnamed\n"]
     assert errs == 1
+
+
+def test_observed_commit_equals_grouped_commit(spark, tmp_path):
+    """Scoped pulls (one container per batch) and a multi-container
+    pull (every container grouped into one batch) both commit through
+    the one Observation-counted commit: on the same spool — decode
+    errors in the first batch, a stale (watermark-violating) file in
+    the second — they commit the same rows, seqs, counters, quarantine
+    and manifest state."""
+    scoped = EngineConfig(warehouse_dir=str(tmp_path / "scoped"))
+    grouped = EngineConfig(warehouse_dir=str(tmp_path / "grouped"))
+    s = _committed_state(spark, scoped,
+                         *_pulled_twice(spark, scoped, _scoped_pulls))
+    g = _committed_state(spark, grouped,
+                         *_pulled_twice(spark, grouped, _multi_pull))
+    assert s == g
+    _assert_expected_state(g)
+
+
+def test_listed_commit_equals_grouped_commit(spark, tmp_path):
+    """A multi-container pull passes its listing to the commit for the
+    read-coverage guard; the multiplexed stream commits the same
+    grouped batches with no listing. On the same spool — decode errors
+    in the first batch, a stale file in the second — both commit the
+    same rows, seqs, counters, quarantine and manifest state."""
+    listed = EngineConfig(warehouse_dir=str(tmp_path / "listed"))
+    streamed = EngineConfig(warehouse_dir=str(tmp_path / "stream"))
+    lst = _committed_state(spark, listed,
+                           *_pulled_twice(spark, listed, _multi_pull))
+    st = _committed_state(spark, streamed,
+                          *_streamed_twice(spark, streamed))
+    assert lst == st
+    _assert_expected_state(lst)
 
 
 @pytest.mark.parametrize("scoped", [True, False], ids=["scoped", "multi"])

@@ -233,13 +233,9 @@ def main() -> None:
         cfg = EngineConfig(warehouse_dir=tempfile.mkdtemp(
             prefix="bench-follow-"))
         eng = Engine(spark, cfg)
-        # writer first: its __init__ creates the spool subdir the
-        # container's readStream source lists
         w = SpoolWriter(cfg.spool_dir, "c0")
-        eng.start_logging("c0", None,
-                          {"message_read_timeout": "100",
-                           "delete_when_stopped": "false"},
-                          streaming=True)
+        eng.start_logging("c0", None, {"delete_when_stopped": "false"})
+        eng.start_multiplexed_ingest()
         arrivals: dict[str, float] = {}
         # the logs dir exists only after the first micro-batch commits
         # — land a warm row before starting the follow stream

@@ -13,6 +13,9 @@
 
 ``serve`` is the reference's main(): replay registered containers, bind
 the LogDriver unix socket, run until interrupted (main.rs:82-110).
+``--streaming`` also runs the multiplexed ingest stream, which ingests
+every container's ``.plog`` spool, including containers that send
+StartLogging after boot.
 The maintenance subcommands are the cleaner-cadence jobs runnable
 out-of-band: retention, compaction, targeted (GDPR) erasure — with
 ``--gc`` to immediately age out pre-erasure snapshots — and manifest
@@ -43,7 +46,8 @@ def main(argv: list[str] | None = None) -> int:
     sv.add_argument("--warehouse", required=True)
     sv.add_argument("--socket", required=True)
     sv.add_argument("--streaming", action="store_true",
-                    help="continuous ingest streams (default: socket only)")
+                    help="run the multiplexed plog ingest stream "
+                         "(default: socket only)")
 
     ig = sub.add_parser("ingest", help="one batch spool pull")
     ig.add_argument("--warehouse", required=True)
@@ -87,7 +91,9 @@ def main(argv: list[str] | None = None) -> int:
     eng = _engine(a.warehouse)
 
     if a.cmd == "serve":
-        eng.replay(streaming=a.streaming)
+        eng.replay()
+        if a.streaming:
+            eng.start_multiplexed_ingest()
         srv = eng.serve_logdriver(a.socket)
         eng.start_cleaner()
         print(f"serving LogDriver on {a.socket}", file=sys.stderr)

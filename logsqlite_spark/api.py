@@ -3,7 +3,10 @@
 Maps the reference's four HTTP endpoints (/root/reference/src/main.rs:97-110,
 docker.rs) onto Python methods over Spark:
 
-- StartLogging  -> :meth:`Engine.start_logging`
+- StartLogging  -> :meth:`Engine.start_logging` (registers the container;
+                   its spool is ingested by the one multiplexed stream,
+                   :meth:`Engine.start_multiplexed_ingest`, or by
+                   :meth:`Engine.ingest_once` pulls)
 - StopLogging   -> :meth:`Engine.stop_logging`
 - ReadLogs      -> :meth:`Engine.scan` (served on the driver),
                    :meth:`Engine.follow_tail` / :meth:`Engine.follow_live`
@@ -33,9 +36,6 @@ from logsqlite_spark.table import init_sharded_table, open_table
 class Engine:
     """One instance ≈ one daemon process of the reference."""
 
-    # T4 restart policy: minimum seconds between bounces per container
-    RESTART_MIN_INTERVAL_S = 5.0
-
     def __init__(self, spark: SparkSession, config: EngineConfig | None = None):
         self.spark = ensure_engine_confs(spark)
         self.config = config or EngineConfig()
@@ -49,10 +49,7 @@ class Engine:
             init_sharded_table(self.config.logs_dir,
                                self.config.manifest_shards)
         self.table = open_table(self.config.logs_dir)
-        self._queries: dict[str, object] = {}  # container_id -> StreamingQuery
-        self._restarts: dict[str, int] = {}    # T4 restart-policy counter
-        self._last_restart: dict[str, float] = {}
-        self._lifecycle_lock = threading.RLock()  # bounces vs stop_logging
+        self._queries: dict[str, object] = {}  # stream key -> StreamingQuery
         # follow_live subscriptions: container_id -> [Queue] (round 13)
         self._live_subs: dict[str, list] = {}
         self._live_lock = threading.Lock()
@@ -91,144 +88,25 @@ class Engine:
     # -- StartLogging (docker.rs:59-84) ---------------------------------------
 
     def start_logging(self, container_id: str, fifo: str | None = None,
-                      options: dict[str, str] | None = None,
-                      streaming: bool = False):
-        """Register a container and begin consuming its spool.
-
-        ``streaming=False`` registers only; ingestion then happens via
-        :meth:`ingest_once` pulls (deterministic, test-friendly).
-        ``streaming=True`` starts a dedicated StreamingQuery on this
-        container's spool subdir. (Production default is ONE
-        multiplexed stream via :meth:`start_multiplexed_ingest`.)
-        """
-        conf = LogConfig.from_options(options)
-        self.state.upsert(container_id, fifo, conf)
-        if streaming:
-            if any(k.startswith("__mux") for k in self._queries):
-                # mirror of the mux-side guard at start_multiplexed_ingest:
-                # ANY mux stream (plog "__mux__" or jsonl "__mux_jsonl__")
-                # consumes every container's spool, whatever format a
-                # future per-container stream might read (ADVICE r15)
-                raise RuntimeError(
-                    "multiplexed ingest already consumes every container's "
-                    "spool — a per-container stream would double-ingest")
-            def on_result(res: dict, _cid=container_id) -> None:
-                self._on_stream_result(res, _cid)
-            q = ING.start_ingest_stream(
-                self.spark,
-                self.config.spool_dir,
-                self.config.logs_dir,
-                self.config.state_dir,
-                f"{self.config.checkpoints_dir}/{container_id}",
-                conf,
-                query_name=f"ingest-{container_id}",
-                container_id=container_id,  # scoped: only this spool subdir
-                on_batch_result=on_result,
-            )
-            self._queries[container_id] = q
-            return q
-        return None
-
-    def _on_stream_result(self, res: dict, container_id: str) -> None:
-        """Per-micro-batch hook of a scoped ingest stream: fan the
-        committed batch out to follow_live subscribers first (a policy
-        restart must never delay followers of an already-committed
-        batch), then apply the T4 restart policy
-        (statehandler.rs:146-166): the reference RESTARTS a
-        container's logger when it dies on a protobuf DecodeError
-        (tear-down on any other error — which a StreamingQuery does by
-        terminating). Here the logger is the StreamingQuery: after a
-        committed batch that saw decode errors, bounce it. The restart
-        runs on a helper thread — a query cannot stop itself from
-        inside its own foreachBatch."""
-        self._publish_live(res)
-        if self.config.on_decode_error == "restart" \
-                and res.get("decode_errors"):
-            self._schedule_restart(container_id)
-
-    def _schedule_restart(self, container_id: str) -> None:
-        """Restart a container's ingest stream (T4 restart policy).
-
-        Exactly-once survives the bounce: the batch that carried the
-        decode error committed its manifest BEFORE the policy hook
-        fired, and the restarted query resumes from the same
-        checkpoint, so no batch is lost or doubled. The good prefix
-        of the corrupt file was kept and the bad frame quarantined —
-        strictly more than the reference preserves (it drops the
-        FIFO's unread buffer on restart).
-
-        Concurrency discipline (round-6 review): all bounces and
-        :meth:`stop_logging` serialize on ``_lifecycle_lock``, so two
-        decode-error batches can't start two queries on one
-        checkpoint and a bounce can't resurrect a container that was
-        just stopped (the claim re-check under the lock sees the pop).
-        A per-container min-interval backoff keeps sustained corrupt
-        input from degrading ingest into restart churn — between
-        bounces the quarantine path still handles every bad frame, so
-        skipping a restart loses nothing. Failures inside the bounce
-        are logged, never silently swallowed into a dead container."""
-        import sys
-        import threading
-        import time
-
-        def bounce() -> None:
-            try:
-                with self._lifecycle_lock:
-                    q = self._queries.get(container_id)
-                    if q is None:
-                        return  # stopped concurrently
-                    now = time.monotonic()
-                    last = self._last_restart.get(container_id, 0.0)
-                    if now - last < self.RESTART_MIN_INTERVAL_S:
-                        return  # backoff: quarantine already handled it
-                    self._last_restart[container_id] = now
-                    try:
-                        q.stop()
-                        q.awaitTermination(60)
-                    except Exception:  # noqa: BLE001 — terminating
-                        pass
-                    if self._queries.get(container_id) is not q:
-                        return  # stop_logging won the race
-                    doc = self.state.get(container_id)
-                    conf = LogConfig.from_dict(
-                        (doc or {}).get("log_conf") or {})
-                    nq = ING.start_ingest_stream(
-                        self.spark, self.config.spool_dir,
-                        self.config.logs_dir, self.config.state_dir,
-                        f"{self.config.checkpoints_dir}/{container_id}",
-                        conf, query_name=f"ingest-{container_id}",
-                        container_id=container_id,
-                        on_batch_result=lambda res, _cid=container_id:
-                            self._on_stream_result(res, _cid),
-                    )
-                    self._queries[container_id] = nq
-                    self._restarts[container_id] = \
-                        self._restarts.get(container_id, 0) + 1
-            except Exception as e:  # noqa: BLE001 — daemon thread
-                print(f"[logsqlite-spark] T4 restart of {container_id} "
-                      f"failed: {type(e).__name__}: {e}", file=sys.stderr)
-
-        t = threading.Thread(target=bounce, daemon=True,
-                             name=f"t4-restart-{container_id}")
-        t.start()
+                      options: dict[str, str] | None = None) -> None:
+        """Register a container. Its spool is ingested by the
+        multiplexed stream (:meth:`start_multiplexed_ingest`), which
+        picks up containers registered after it started, or by
+        :meth:`ingest_once` pulls."""
+        self.state.upsert(container_id, fifo, LogConfig.from_options(options))
 
     def start_multiplexed_ingest(self, conf: LogConfig | None = None,
                                  fmt: str = "plog"):
-        """The scale path: one stream, all containers (SURVEY §7.5).
+        """The daemon's streaming ingest: one stream over every
+        container's spool (SURVEY §7.5), committed by one epoch-keyed
+        manifest commit per micro-batch.
 
         ``fmt`` selects the wire format; a ``plog`` and a ``jsonl``
-        mux stream may run side by side (their source globs are
-        disjoint — ``*.plog*`` vs ``*.jsonl*`` — so they never share a
-        spool file, and each commits under its own query-name scope
-        through the manifest lock).  Mixing a mux stream with
-        per-container streams stays refused: those DO overlap the
-        same files and would double-ingest."""
+        stream may run side by side (their source globs are disjoint
+        — ``*.plog*`` vs ``*.jsonl*`` — so they never share a spool
+        file, and each commits under its own query-name scope through
+        the manifest lock)."""
         key = "__mux__" if fmt == "plog" else f"__mux_{fmt}__"
-        if any(not k.startswith("__mux") for k in self._queries):
-            raise RuntimeError(
-                "per-container ingest streams are active; stop them before "
-                "starting the multiplexed stream (overlapping spool reads "
-                "would double-ingest)")
         if key in self._queries:
             raise RuntimeError(f"multiplexed {fmt} stream already active")
         q = ING.start_ingest_stream(
@@ -375,14 +253,9 @@ class Engine:
     # -- StopLogging (docker.rs:93-109, statehandler.rs:126-135) --------------
 
     def stop_logging(self, container_id: str) -> None:
-        """Stop ingest, drop state; delete data if configured
+        """Drop state; delete data if configured
         (statehandler.rs:173-182 delete_when_stopped)."""
         doc = self.state.get(container_id)
-        with self._lifecycle_lock:
-            q = self._queries.pop(container_id, None)
-        if q is not None:
-            q.stop()            # drains the in-flight micro-batch (T5)
-            q.awaitTermination(60)
         self.state.remove(container_id)
         if doc and doc["log_conf"].get("delete_when_stopped"):
             RET.drop_container(self.config.logs_dir, container_id)
@@ -462,6 +335,7 @@ class Engine:
         import glob as _glob
 
         from logsqlite_spark.sources import frames as _fr
+        from logsqlite_spark.sources import jsonl as _js
         from logsqlite_spark.sources.spool import PublishWatch
 
         spool = f"{self.config.spool_dir}/{container_id}"
@@ -490,21 +364,14 @@ class Engine:
                 path = path[:-3]
             out = []
             if path.endswith(".jsonl"):
-                import json as _json
-
-                for ln in blob.decode("utf-8", "replace").splitlines():
-                    if not ln:
-                        continue
-                    try:
-                        rec = _json.loads(ln)
-                    except ValueError:
-                        continue  # corrupt line: error row, never seq'd
-                    pm = rec.get("partial_meta")
-                    out.append((rec.get("source") or "",
-                                int(rec.get("time_nano") or 0),
-                                (rec.get("line") or ""),
-                                bool(rec.get("partial") or False),
-                                pm))
+                # the lines ingest quarantines are skipped (never
+                # seq'd); the rest are seq'd in ingest's (n, nulls
+                # first) order
+                recs = [r for r in map(_js.parse_jsonl_line,
+                                       _js.jsonl_lines(blob))
+                        if r is not None]
+                recs.sort(key=lambda r: (r[0] is not None, r[0] or 0))
+                out = [r[1:] for r in recs]
             else:
                 try:
                     entries = list(_fr.decode_frames(blob))
@@ -657,17 +524,12 @@ class Engine:
 
     # -- boot replay (T3) ------------------------------------------------------
 
-    def replay(self, streaming: bool = False) -> list[str]:
-        """Restart ingestion for every registered container
-        (statehandler.rs:193-219). Streaming checkpoints resume offsets
-        exactly-once; batch mode resumes at the seq high-water."""
-        restarted = []
-        for doc in self.state.list_all():
-            cid = doc["container_id"]
-            if streaming:
-                self.start_logging(cid, doc.get("fifo"), streaming=True)
-            restarted.append(cid)
-        return restarted
+    def replay(self) -> list[str]:
+        """The containers registered before a restart
+        (statehandler.rs:193-219). Nothing per container needs
+        restarting: the multiplexed stream's checkpoint resumes its
+        offsets exactly-once, and pulls resume at the seq high-water."""
+        return [doc["container_id"] for doc in self.state.list_all()]
 
     # -- cleaner (cleaner.rs:134-158) ------------------------------------------
 

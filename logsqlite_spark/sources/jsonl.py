@@ -2,10 +2,10 @@
 
 The reference speaks only Docker's protobuf FIFO framing, but generic
 log shippers (fluentd/vector/filebeat) emit JSON lines. Supporting
-them as a first-class spool format has a performance bonus: Spark's
-native JSON reader decodes *inside the JVM* (whole-stage codegen, no
-Python in the loop), unlike the protobuf codec which needs
-``mapInPandas``. At 100 TB the JSONL path is the faster ingest.
+them as a first-class spool format has a performance bonus: the JSON
+field decode runs *inside the JVM* (``from_json``, no Python in the
+loop); only the per-file gunzip and line split run in Arrow-side
+Python.
 
 Record shape (one JSON object per line):
 
@@ -30,31 +30,76 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _decoded_input_file_name() -> F.Column:
-    """``input_file_name()``, percent-DECODED to the raw posix form.
-
-    Unlike ``binaryFile``'s path column (plain: a warehouse dir with a
-    space comes back with a literal space), ``input_file_name()``
-    yields the URI-encoded spelling (space -> %20, %% -> %25).  The
-    last_file watermark, the stale-file compare, and the batch-pull
-    read-coverage guard all compare this column against raw
-    driver-side listings, so without decoding a single escapable
-    character in the spool path makes every file look uncovered and
-    permanently blocks the pull (round-15 ADVICE, reproduced with a
-    space in the warehouse dir).
-
-    ``url_decode`` is form-decoding ('+' -> space), but
-    ``input_file_name()`` leaves a literal '+' unescaped — protect it
-    as %2B first and the two decodings agree.  Every '%' in the input
-    is a valid escape because the URI form is Spark-generated."""
-    return F.url_decode(
-        F.regexp_replace(F.input_file_name(), r"\+", "%2B"))
-
 JSONL_SCHEMA = (
     "n long, source string, time_nano long, line string, partial boolean, "
     "partial_meta struct<last:boolean,id:string,ordinal:int>, "
     "_corrupt string"
 )
+
+
+def jsonl_lines(buf: bytes) -> list[str]:
+    """The records of one decompressed JSONL file: split on newlines,
+    a trailing carriage return dropped, blank lines skipped."""
+    out = []
+    for ln in buf.decode("utf-8", "replace").split("\n"):
+        ln = ln.rstrip("\r")
+        if ln.strip():
+            out.append(ln)
+    return out
+
+
+_INT64 = (-1 << 63, (1 << 63) - 1)
+_INT32 = (-1 << 31, (1 << 31) - 1)
+
+
+def _int_ok(v, bounds) -> bool:
+    return v is None or (type(v) is int and bounds[0] <= v <= bounds[1])
+
+
+def _text(v) -> str | None:
+    """A JSON value read into a string field, rendered the way
+    ``from_json`` renders it (non-strings become their JSON text)."""
+    if v is None or isinstance(v, str):
+        return v
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, (int, float)):
+        return repr(v)
+    return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
+
+
+def parse_jsonl_line(ln: str) -> tuple | None:
+    """One JSONL record decoded on the driver the way ``from_json``
+    with ``JSONL_SCHEMA`` decodes it on an executor:
+    ``(n, source, time_nano, line, partial, partial_meta)``, or None
+    for a line ingest quarantines as a decode error — not a JSON
+    object, or a typed field of the wrong JSON type or out of range.
+    Like Spark's reader it takes the first JSON value on the line
+    and ignores what follows it."""
+    try:
+        rec, _ = json.JSONDecoder().raw_decode(ln.lstrip(" \t"))
+    except (ValueError, RecursionError):  # RecursionError: deep nesting
+        return None
+    if not isinstance(rec, dict):
+        return None
+    n, tn, partial = rec.get("n"), rec.get("time_nano"), rec.get("partial")
+    pm = rec.get("partial_meta")
+    if not (_int_ok(n, _INT64) and _int_ok(tn, _INT64)
+            and (partial is None or isinstance(partial, bool))):
+        return None
+    if pm is not None:
+        if not (isinstance(pm, dict) and _int_ok(pm.get("ordinal"), _INT32)
+                and (pm.get("last") is None
+                     or isinstance(pm.get("last"), bool))):
+            return None
+        pm = {"last": pm.get("last"), "id": _text(pm.get("id")),
+              "ordinal": pm.get("ordinal")}
+    source = _text(rec.get("source")) or ""
+    if source == "__decode_error__":
+        return None  # ingest's error marker: never seq'd
+    return (n, source, tn or 0, _text(rec.get("line")) or "",
+            bool(partial), pm)
+
 
 class JsonlSpoolWriter:
     """Burst writer for the JSONL format (shipper stand-in)."""
@@ -93,28 +138,33 @@ class JsonlSpoolWriter:
         self._counter += 1
         return str(name)
 
-_GZ_SPLIT_DDL = "path string, raw string"
+_SPLIT_DDL = "path string, raw string"
 
 
-def _split_jsonl_gz_arrow(batches):
-    """mapInArrow body for ``.jsonl.gz`` spool files: per-file gunzip
-    + line split (the JSON field decode stays JVM-side via
-    ``from_json``).  Spark's native json reader gunzips by extension
+def _split_jsonl_arrow(batches):
+    """mapInArrow body for JSONL spool files, plain and ``.jsonl.gz``
+    alike: per-file gunzip + line split (the JSON field decode stays
+    JVM-side via ``from_json``).  Every read path — pull and stream,
+    plain and gz — goes through here, so a line is quarantined the
+    same way whichever path reads it.
+
+    Spark's native json reader is not used: it gunzips by extension
     via the Hadoop codec, which THROWS on a corrupt/truncated stream
-    (ignoreCorruptFiles=false) — one bad rotated-shipper file would
-    fail the whole pull and be retried forever (the watermark never
-    advances past it).  Routing gz files through the same
-    ``_gunzip_buf`` quarantine policy as ``.plog.gz`` makes a corrupt
-    file yield ONE unparseable sentinel line instead: ``from_json``
-    marks it ``_corrupt`` and it flows into the decode-error
-    quarantine while the pull proceeds."""
+    (one bad rotated-shipper file would fail the whole pull and be
+    retried forever), and it flags a mistyped field as corrupt only
+    when that field is in the pruned read schema, so a pull's
+    quarantine re-scan could miss the very line its write counted.
+    Routing every file through the ``_gunzip_buf`` quarantine policy
+    (shared with ``.plog.gz``) makes a corrupt gz file yield ONE
+    unparseable sentinel line instead: ``from_json`` marks it
+    ``_corrupt`` and it flows into the decode-error quarantine while
+    the pull proceeds."""
     import pyarrow as pa
 
-    from logsqlite_spark.sources.spool import _BAD_GZIP_SENTINEL, _gunzip_buf
+    from logsqlite_spark.sources.spool import (
+        _BAD_GZIP_SENTINEL, _gunzip_buf, _verify_content_lengths)
 
     schema = pa.schema([("path", pa.string()), ("raw", pa.string())])
-    from logsqlite_spark.sources.spool import _verify_content_lengths
-
     for batch in batches:
         _verify_content_lengths(batch)
         contents = batch.column("content")
@@ -131,83 +181,78 @@ def _split_jsonl_gz_arrow(batches):
                 out_r.append(
                     f"\x00 corrupt gzip stream (read {len(raw)} bytes)")
                 continue
-            for ln in buf.decode("utf-8", "replace").split("\n"):
-                ln = ln.rstrip("\r")
-                if ln.strip():  # the native reader skips blank lines too
-                    out_p.append(p)
-                    out_r.append(ln)
+            for ln in jsonl_lines(buf):
+                out_p.append(p)
+                out_r.append(ln)
         yield pa.RecordBatch.from_arrays(
             [pa.array(out_p, pa.string()), pa.array(out_r, pa.string())],
             schema=schema)
 
 
-def _jsonl_gz_raw(binary_df: DataFrame) -> DataFrame:
-    """(path, content) of ``.jsonl.gz`` files -> the native json
-    reader's raw shape (so ``_to_entry_shape`` is shared)."""
+def _decode_jsonl(binary_df: DataFrame) -> DataFrame:
+    """(path, length, content) of JSONL spool files -> the decoded
+    entry shape of sources/spool.DECODED_SCHEMA (S2-canonicalized,
+    container_id from the path), so the ingest pipeline is shared.
+    Unparseable lines flow into the same '__decode_error__'
+    quarantine as corrupt protobuf frames (T4 policy, one place
+    downstream)."""
     rec = F.from_json(
         "raw", JSONL_SCHEMA,
         {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
     ).alias("rec")
-    split = binary_df.mapInArrow(_split_jsonl_gz_arrow, _GZ_SPLIT_DDL) \
+    split = binary_df.mapInArrow(_split_jsonl_arrow, _SPLIT_DDL) \
         .select("path", "raw", rec)
     # from_json yields a NULL struct (not a populated _corrupt) on some
     # unparseable inputs — coalesce so either form quarantines
-    corrupt = F.coalesce(
+    err = F.coalesce(
         F.col("rec._corrupt"),
         F.when(F.col("rec").isNull(), F.col("raw")))
+    corrupt = err.isNotNull()
+    line = F.col("rec.line")
     return split.select(
-        F.col("rec.n").alias("n"),
-        F.col("rec.source").alias("source"),
-        F.col("rec.time_nano").alias("time_nano"),
-        F.col("rec.line").alias("line"),
-        F.col("rec.partial").alias("partial"),
+        # plain-filesystem path form, matching sources/spool
+        # (_finish_decoded)
+        F.regexp_replace("path", r"^file:/+", "/").alias("path"),
+        F.element_at(F.split(F.col("path"), "/"), -2).alias("container_id"),
+        F.when(corrupt, F.lit("__decode_error__"))
+        .otherwise(F.coalesce(F.col("rec.source"), F.lit("")))
+        .alias("source"),
+        F.coalesce(F.col("rec.time_nano"), F.lit(0)).alias("time_nano"),
+        F.when(corrupt, F.concat(err, F.lit("\n")))
+        .when(line.endswith("\n"), line)
+        .otherwise(F.concat(F.coalesce(line, F.lit("")), F.lit("\n")))
+        .alias("line"),
+        F.coalesce(F.col("rec.partial"), F.lit(False)).alias("partial"),
         F.col("rec.partial_meta").alias("partial_meta"),
-        corrupt.alias("_corrupt"),
-        "path",
+        F.when(corrupt, F.lit(-1)).otherwise(F.col("rec.n"))
+        .alias("frame_no"),
     )
-
 
 def read_jsonl_spool_batch(spark: SparkSession, spool_dir: str,
                            container_id: str | None = None,
                            paths: list[str] | None = None) -> DataFrame:
-    """Decode JSONL spool files to the same shape the protobuf decode
-    yields (path, container_id, ..., frame_no).  Plain ``.jsonl``
-    files decode fully JVM-side; ``.jsonl.gz`` files gunzip through
-    the Arrow quarantine path (see ``_split_jsonl_gz_arrow`` — the
-    native codec turns one corrupt shipper file into a poison pill).
-    ``paths``: exact file list from a driver-side listing (skips a
-    second Spark directory listing and pins the read set)."""
+    """Decode JSONL spool files (plain and ``.jsonl.gz``) to the same
+    shape the protobuf decode yields (path, container_id, ...,
+    frame_no), through the same ``binaryFile`` → ``_split_jsonl_arrow``
+    → ``from_json`` path as the stream.  ``paths``: exact file list
+    from a driver-side listing (skips a second Spark directory listing
+    and pins the read set)."""
     if paths is None:
         import glob as _glob
 
         paths = sorted(
             _glob.glob(f"{spool_dir}/{container_id or '*'}/*.jsonl*"))
-    plain = [p for p in paths if not p.endswith(".gz")]
-    gz = [p for p in paths if p.endswith(".gz")]
-    parts = []
-    if plain:
-        parts.append(
-            spark.read.schema(JSONL_SCHEMA)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt")
-            .json(plain)
-            .withColumn("path", _decoded_input_file_name())
-        )
-    if gz:
-        parts.append(_jsonl_gz_raw(
-            spark.read.format("binaryFile").load(gz)
-            .select("path", "length", "content")))
-    if not parts:
-        parts.append(spark.createDataFrame(
-            [], JSONL_SCHEMA + ", path string"))
-    raw = parts[0]
-    for extra in parts[1:]:
-        raw = raw.unionByName(extra)
-    return _to_entry_shape(raw)
+    if paths:
+        raw = spark.read.format("binaryFile").load(paths)
+    else:
+        raw = spark.createDataFrame(
+            [], "path string, length long, content binary")
+    return _decode_jsonl(raw.select("path", "length", "content"))
+
 
 def read_jsonl_spool_stream(spark: SparkSession, spool_dir: str,
-                            max_bytes_per_trigger: int | None = None,
-                            container_id: str | None = None) -> DataFrame:
+                            max_bytes_per_trigger: int | None = None
+                            ) -> DataFrame:
     """Streaming decode: ONE ``binaryFile`` source for plain ``.jsonl``
     AND ``.jsonl.gz``, split+gunzipped Arrow-side with the JSON field
     decode JVM-side via ``from_json`` — mirroring the plog stream.
@@ -226,9 +271,9 @@ def read_jsonl_spool_stream(spark: SparkSession, spool_dir: str,
 
     Corrupt gz files still quarantine as ONE decode-error row instead
     of failing micro-batches forever (``_gunzip_buf`` sentinel), and a
-    corrupt plain line flows into the same ``_corrupt`` path as the
-    batch reader's PERMISSIVE mode."""
-    src = f"{spool_dir}/{container_id or '*'}/"
+    corrupt line is quarantined exactly as on a pull: both decode
+    through ``_decode_jsonl``."""
+    src = f"{spool_dir}/*/"
     reader = (
         spark.readStream.format("binaryFile")
         .schema("path string, modificationTime timestamp, "
@@ -241,32 +286,5 @@ def read_jsonl_spool_stream(spark: SparkSession, spool_dir: str,
     if max_bytes_per_trigger is not None:
         reader = reader.option("maxBytesPerTrigger",
                                str(max_bytes_per_trigger))
-    raw = _jsonl_gz_raw(reader.load(src)
-                        .select("path", "length", "content"))
-    return _to_entry_shape(raw)
-
-def _to_entry_shape(raw: DataFrame) -> DataFrame:
-    """Canonicalize (S2) + derive container_id from the path, matching
-    sources/spool.DECODED_SCHEMA so the ingest pipeline is shared.
-    Unparseable lines flow into the same '__decode_error__' quarantine
-    as corrupt protobuf frames (T4 policy, one place downstream)."""
-    corrupt = F.col("_corrupt").isNotNull()
-    return raw.select(
-        # plain-filesystem path form, matching sources/spool
-        # (_finish_decoded) — the scheme strip covers the binaryFile
-        # (.gz) side; the input_file_name side arrives pre-decoded via
-        # _decoded_input_file_name (see its escaping note)
-        F.regexp_replace("path", r"^file:/+", "/").alias("path"),
-        F.element_at(F.split(F.col("path"), "/"), -2).alias("container_id"),
-        F.when(corrupt, F.lit("__decode_error__"))
-        .otherwise(F.coalesce(F.col("source"), F.lit(""))).alias("source"),
-        F.coalesce(F.col("time_nano"), F.lit(0)).alias("time_nano"),
-        F.when(corrupt, F.concat(F.col("_corrupt"), F.lit("\n")))
-        .when(F.col("line").endswith("\n"), F.col("line"))
-        .otherwise(F.concat(F.coalesce(F.col("line"), F.lit("")),
-                            F.lit("\n"))).alias("line"),
-        F.coalesce(F.col("partial"), F.lit(False)).alias("partial"),
-        F.col("partial_meta"),
-        F.when(corrupt, F.lit(-1))
-        .otherwise(F.col("n")).alias("frame_no"),
-    )
+    return _decode_jsonl(reader.load(src)
+                         .select("path", "length", "content"))

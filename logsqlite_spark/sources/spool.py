@@ -14,23 +14,14 @@ Structured Streaming — same decode either way); frame decoding runs
 *inside executors*, so ingest parallelism = number of spool files,
 independent of cluster size.
 
-Decode paths (fastest available wins, ``SPARK_GRAFT_PLOG_DECODER``
-overrides with ``jvm`` / ``arrow``):
+Decoding is numpy-vectorized over all frames of a batch at once via
+``mapInArrow`` (vdecode.py) — no per-frame Python objects; ~2.6x the
+round-1 per-frame codec on raw decode plus the avoided pandas
+conversion.  A corrupt frame ends its file's decode: the frames
+before it are kept and the rest of the file becomes one decode-error
+row (the T4 quarantine), the same cut ``Engine.follow_tail`` makes.
 
-- ``jvm``: split frames executor-side, decode fields with
-  ``from_protobuf()`` (pyspark.sql.protobuf.functions) against a
-  hand-built descriptor set (descriptor.py) — fully JVM/codegen field
-  decode. Used automatically when the spark-protobuf module is on the
-  classpath (it is not in this container, so this path is
-  capability-probed and pytest-skipped here; semantics note: a corrupt
-  frame is quarantined individually under PERMISSIVE mode rather than
-  aborting the rest of its file).
-- ``arrow`` (portable default): numpy-vectorized decode over all
-  frames of a batch at once via ``mapInArrow`` (vdecode.py) — no
-  per-frame Python objects; ~2.6x the round-1 per-frame codec on raw
-  decode plus the avoided pandas conversion.
-
-Either way, UTF-8 casting and ``\\n`` canonicalization (S2,
+UTF-8 casting and ``\\n`` canonicalization (S2,
 logger.rs:122-123) happen as JVM expressions, not in Python.
 """
 
@@ -323,115 +314,7 @@ def _finish_decoded(raw: DataFrame) -> DataFrame:
     )
 
 
-# --- JVM from_protobuf path -------------------------------------------------
-
-_SPLIT_DDL = "path string, frame binary, frame_no long, err string"
-
-
-def _split_frames_arrow(batches: Iterator) -> Iterator:
-    """mapInArrow body for the JVM path: framing split only (u32-BE
-    length walk); protobuf field decode happens in the JVM."""
-    import pyarrow as pa
-
-    schema = pa.schema([("path", pa.string()), ("frame", pa.binary()),
-                        ("frame_no", pa.int64()), ("err", pa.string())])
-    for batch in batches:
-        _verify_content_lengths(batch)
-        paths = batch.column("path").to_pylist()
-        rows = {"path": [], "frame": [], "frame_no": [], "err": []}
-        for i, scalar in enumerate(batch.column("content")):
-            buf = _gunzip_buf(paths[i], scalar.as_py())
-            pos, n, k = 0, len(buf), 0
-            while pos < n:
-                if pos + 4 > n:
-                    rows["path"].append(paths[i])
-                    rows["frame"].append(None)
-                    rows["frame_no"].append(-1)
-                    rows["err"].append("truncated length prefix")
-                    break
-                ln = int.from_bytes(buf[pos:pos + 4], "big")
-                pos += 4
-                if pos + ln > n:
-                    rows["path"].append(paths[i])
-                    rows["frame"].append(None)
-                    rows["frame_no"].append(-1)
-                    rows["err"].append("truncated frame body")
-                    break
-                rows["path"].append(paths[i])
-                rows["frame"].append(buf[pos:pos + ln])
-                rows["frame_no"].append(k)
-                rows["err"].append(None)
-                pos += ln
-                k += 1
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(rows["path"], pa.string()),
-             pa.array(rows["frame"], pa.binary()),
-             pa.array(rows["frame_no"], pa.int64()),
-             pa.array(rows["err"], pa.string())], schema=schema)
-
-
-def jvm_protobuf_available(spark: SparkSession) -> bool:
-    """True when the spark-protobuf module is on the JVM classpath."""
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is None:  # e.g. Spark Connect session
-        return False
-    try:
-        jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst")
-        return True
-    except Exception:
-        return False
-
-
-def _decode_via_jvm(raw: DataFrame) -> DataFrame:
-    """from_protobuf field decode (SURVEY §2.1 S1's native mapping).
-
-    A frame that protobuf-decodes to null under PERMISSIVE mode is
-    quarantined as its own sentinel row (the vectorized path aborts
-    the rest of the file instead — stricter; both surface the T4
-    decode-error policy).
-    """
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    from logsqlite_spark.sources.descriptor import (
-        MESSAGE_NAME, log_entry_descriptor_set)
-
-    split = raw.mapInArrow(_split_frames_arrow, _SPLIT_DDL)
-    e = from_protobuf(
-        "frame", MESSAGE_NAME,
-        binaryDescriptorSet=log_entry_descriptor_set(),
-        options={"mode": "PERMISSIVE"},
-    ).alias("e")
-    split = split.select("path", "frame_no", "err", e)
-    corrupt = F.col("err").isNotNull() | F.col("e").isNull()
-    pm = F.col("e.partial_log_metadata")
-    return split.select(
-        "path",
-        F.when(corrupt, F.lit(vdecode.DECODE_ERROR_SOURCE))
-        .otherwise(F.col("e.source").cast("binary")).alias("source"),
-        F.when(corrupt, F.lit(0)).otherwise(F.col("e.time_nano"))
-        .cast("long").alias("time_nano"),
-        F.when(corrupt,
-               F.concat(F.col("path"), F.lit(": "),
-                        F.coalesce(F.col("err"), F.lit("protobuf decode error")))
-               .cast("binary"))
-        .otherwise(F.col("e.line")).alias("line"),
-        F.when(corrupt, F.lit(False)).otherwise(F.col("e.partial"))
-        .alias("partial"),
-        F.when(corrupt | pm.isNull(), F.lit(None))
-        .otherwise(F.struct(pm["last"].alias("last"), pm["id"].alias("id"),
-                            pm["ordinal"].alias("ordinal")))
-        .alias("partial_meta"),
-        F.when(corrupt, F.lit(-1)).otherwise(F.col("frame_no"))
-        .cast("long").alias("frame_no"),
-    )
-
-
 def _decode(raw: DataFrame) -> DataFrame:
-    mode = os.environ.get("SPARK_GRAFT_PLOG_DECODER", "auto")
-    if mode == "jvm" or (mode == "auto"
-                         and jvm_protobuf_available(raw.sparkSession)):
-        return _finish_decoded(_decode_via_jvm(raw))
     return _finish_decoded(raw.mapInArrow(_decode_arrow, vdecode.RAW_DDL))
 
 
@@ -454,16 +337,12 @@ def read_spool_batch(spark: SparkSession, spool_dir: str,
 
 
 def read_spool_stream(spark: SparkSession, spool_dir: str,
-                      max_bytes_per_trigger: int | None = None,
-                      container_id: str | None = None) -> DataFrame:
+                      max_bytes_per_trigger: int | None = None) -> DataFrame:
     """Structured Streaming decode over the multiplexed spool root.
 
     ONE stream for ALL containers (the path carries container_id) —
-    the design default per SURVEY §7.5: per-container StreamingQueries
-    mirror the reference but fall over past a few hundred containers.
-    ``container_id`` scopes the stream to one container's subdir (used
-    by per-container ``start_logging(streaming=True)`` so concurrent
-    container streams never share spool files or seq state).
+    SURVEY §7.5: per-container StreamingQueries mirror the reference
+    but fall over past a few hundred containers.
     ``maxBytesPerTrigger`` maps the reference's ``max_size_per_tx``
     batching cap onto micro-batch sizing.
     """
@@ -481,5 +360,5 @@ def read_spool_stream(spark: SparkSession, spool_dir: str,
     )
     if max_bytes_per_trigger is not None:
         reader = reader.option("maxBytesPerTrigger", str(max_bytes_per_trigger))
-    raw = reader.load(f"{spool_dir}/{container_id or '*'}/")
+    raw = reader.load(f"{spool_dir}/*/")
     return _decode(raw.select("path", "length", "content"))

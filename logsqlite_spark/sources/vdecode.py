@@ -2,11 +2,10 @@
 
 The S1 hot path. Round 1 decoded protobuf frames one at a time in
 Python (per-frame object churn inside ``mapInPandas``) — the classic
-slow path. The JVM-native fix is ``from_protobuf()`` (see
-``spool.py``), but the spark-protobuf module isn't deployed in every
-environment (not in this container), so this module is the portable
-fast path: SIMD-style protobuf decoding with numpy over *all frames of
-a batch at once*, emitting Arrow arrays built zero-copy from gathered
+slow path. ``from_protobuf()`` would need the spark-protobuf module,
+which a stock PySpark install does not ship, so this module is the
+one decode path: SIMD-style protobuf decoding with numpy over *all
+frames of a batch at once*, emitting Arrow arrays built zero-copy from gathered
 buffers. No per-frame Python objects on the happy path.
 
 How it works:

@@ -21,8 +21,8 @@ any two steps leaves only unreferenced staging files; replaying the
 micro-batch (same epoch id) is detected inside the commit and skipped,
 so plain parquet never degrades to at-least-once.
 
-One commit path: every caller — a pull (scoped or multi-container), a
-scoped stream, the multiplexed stream — hands its decoded batch to
+One commit path: every caller — a pull (one container or all of them)
+and the multiplexed stream — hands its decoded batch to
 ``_write_batch``, which commits it in ONE Spark job: the staged write
 carries an ``Observation`` of the counts and paths the commit needs,
 and the per-container seq increments come from the staged footers.
@@ -163,9 +163,8 @@ def _write_batch(batch_df: DataFrame, logs_dir: str, state_dir: str,
                  listing: list[str] | None = None) -> dict:
     """Assign seq and append one (micro-)batch; returns progress info.
 
-    The one commit path: pulls (scoped or multi-container), scoped
-    streams and the multiplexed stream all commit here, in ONE Spark
-    job.  Decode → seq → staged write runs once, with an
+    The one commit path: pulls (one container or all of them) and
+    the multiplexed stream commit here, in ONE Spark job.  Decode → seq → staged write runs once, with an
     ``Observation`` riding the write that counts decode errors, good
     rows and stale rows and collects the set of (path, stale) pairs
     the batch read.  Everything else the commit needs is driver
@@ -523,17 +522,14 @@ def start_ingest_stream(
     conf: LogConfig | None = None,
     query_name: str = "logsqlite-ingest",
     fmt: str = "plog",
-    container_id: str | None = None,
     on_batch_result=None,
 ):
-    """S4/S5: the continuous ingest StreamingQuery.
-
-    Default is ONE multiplexed stream for all containers (SURVEY §7.5);
-    ``container_id`` scopes the stream to that container's spool subdir
-    for per-container queries (one writer per container, like the
-    reference's one logger per FIFO — concurrent scoped streams commit
-    disjoint containers through the manifest lock, so they can't lose
-    each other's updates). The stream's ``query_name`` is its batch-id
+    """S4/S5: the continuous ingest StreamingQuery — ONE multiplexed
+    stream over every container's spool subdir (SURVEY §7.5; the path
+    carries container_id). Exactly-once holds per container because
+    each micro-batch commits through one epoch-keyed manifest commit,
+    and a container whose subdir appears after the start is listed on
+    the next trigger. The stream's ``query_name`` is its batch-id
     scope in the manifest; give concurrent streams distinct names.
 
     LogConfig mapping (config.rs:175-177 -> Spark):
@@ -546,19 +542,17 @@ def start_ingest_stream(
         from logsqlite_spark.sources.jsonl import read_jsonl_spool_stream
 
         decoded = read_jsonl_spool_stream(
-            spark, spool_dir, max_bytes_per_trigger=conf.max_size_per_tx,
-            container_id=container_id)
+            spark, spool_dir, max_bytes_per_trigger=conf.max_size_per_tx)
     else:
         decoded = read_spool_stream(spark, spool_dir,
-                                    max_bytes_per_trigger=conf.max_size_per_tx,
-                                    container_id=container_id)
+                                    max_bytes_per_trigger=conf.max_size_per_tx)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         res = _write_batch(batch_df, logs_dir, state_dir, query_name,
                            batch_id,
                            max_records_per_file=max(conf.max_lines_per_tx, 1))
-        # Observed AFTER the manifest commit, so a policy hook (e.g.
-        # T4 restart-on-decode-error) never sees an uncommitted batch.
+        # Observed AFTER the manifest commit, so a hook (the
+        # follow_live fan-out) never sees an uncommitted batch.
         if on_batch_result is not None:
             on_batch_result(res)
 

@@ -13,10 +13,7 @@
    was os.path-gated on _local_fs_path), so a crash mid-rebuild left
    _heal_refit returning False forever.  The meta now rides the
    Hadoop FS API like the marker, scheme-agnostic.
-3. (low) register_container's streaming guard checked only "__mux__",
-   so a per-container stream could start while a jsonl mux
-   ("__mux_jsonl__") was active.
-4. (low) the multi-chunk aggregate of ingest_spool_once hardcoded
+3. (low) the multi-chunk aggregate of ingest_spool_once hardcoded
    batch_id: None and dropped single-chunk keys (skipped_replay,
    ...), so the result shape silently differed once the backlog
    exceeded max_files_per_pull.
@@ -24,7 +21,6 @@
 
 import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
 from logsqlite_spark.sources.frames import LogEntry
@@ -188,25 +184,7 @@ def test_refit_crash_heals_when_path_not_local(spark, tmp_path, monkeypatch):
     assert got == base_ids | batch_ids
 
 
-# --- 3: per-container stream refused while ANY mux stream is active --
-
-def test_register_container_refused_under_jsonl_mux(spark, tmp_path):
-    from logsqlite_spark.api import Engine
-    from logsqlite_spark.config import EngineConfig
-
-    eng = Engine(spark, EngineConfig(warehouse_dir=str(tmp_path / "wh")))
-    # a jsonl mux consumes every container's spool exactly like the
-    # plog mux; inject its registry key (no need to spin a real query)
-    eng._queries["__mux_jsonl__"] = object()
-    with pytest.raises(RuntimeError, match="double-ingest"):
-        eng.start_logging("c1", streaming=True)
-    eng._queries.clear()
-    eng._queries["__mux__"] = object()  # the pre-existing guard stands
-    with pytest.raises(RuntimeError, match="double-ingest"):
-        eng.start_logging("c1", streaming=True)
-
-
-# --- 4: the chunked pull result is a superset of the single-chunk ----
+# --- 3: the chunked pull result is a superset of the single-chunk ----
 
 def test_chunked_pull_result_shape_matches_single_chunk(spark, tmp_path):
     spool, logs, state = (str(tmp_path / "spool"), str(tmp_path / "logs"),

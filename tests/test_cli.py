@@ -98,3 +98,61 @@ def test_cli_read_follow_is_the_spool_tail(spark, tmp_path, capsys,
     assert not th.is_alive()
     assert rc["v"] == 0
     assert out + capsys.readouterr().out == "old-0\nold-1\nnew-0\n"
+
+
+def test_cli_serve_streaming_ingests_container_started_after_boot(
+        spark, tmp_path, monkeypatch):
+    """serve --streaming runs ONE multiplexed ingest stream, so a
+    container that sends StartLogging after boot is ingested at once:
+    its burst commits with seqs 1..n while the daemon runs."""
+    import json
+    import signal
+    import time
+
+    from logsqlite_spark.server import connect_client
+    from logsqlite_spark.sources.frames import LogEntry
+    from logsqlite_spark.sources.spool import SpoolWriter
+
+    wh = str(tmp_path / "wh")
+    sock = str(tmp_path / "plugin.sock")
+    cfg = EngineConfig(warehouse_dir=wh)
+    base = int(datetime(2024, 1, 1, tzinfo=timezone.utc).timestamp() * 1e9)
+    n = 5
+    seen: dict = {}
+
+    def committed_seqs() -> list[int]:
+        try:
+            df = ManifestTable(cfg.logs_dir).read_df(spark)
+            return sorted(r["seq"] for r in
+                          df.filter("container_id = 'cnew'")
+                          .select("seq").collect())
+        except Exception:  # noqa: BLE001 — no commit published yet
+            return []
+
+    def pause():
+        try:
+            conn = connect_client(sock)
+            body = json.dumps({"File": "/run/cnew.fifo",
+                               "Info": {"ContainerID": "cnew"}}).encode()
+            conn.request("POST", "/LogDriver.StartLogging", body=body,
+                         headers={"Content-Length": str(len(body))})
+            seen["start"] = json.loads(conn.getresponse().read())
+            SpoolWriter(cfg.spool_dir, "cnew").write_burst([
+                LogEntry(source="stdout", time_nano=base + i,
+                         line=f"new-{i}".encode()) for i in range(n)])
+            deadline = time.monotonic() + 90
+            while time.monotonic() < deadline:
+                seen["seqs"] = committed_seqs()
+                if len(seen["seqs"]) >= n:
+                    break
+                time.sleep(0.25)
+        finally:
+            raise KeyboardInterrupt
+
+    monkeypatch.setattr(signal, "signal", lambda *a: None)
+    monkeypatch.setattr(signal, "pause", pause)
+    rc = main(["serve", "--warehouse", wh, "--socket", sock,
+               "--streaming"])
+    assert rc == 0
+    assert seen["start"] == {"Err": ""}
+    assert seen["seqs"] == list(range(1, n + 1))

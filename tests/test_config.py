@@ -70,14 +70,3 @@ def test_logconfig_bad_bool():
 def test_logconfig_roundtrip():
     c = LogConfig(cleanup_age_s=60)
     assert LogConfig.from_dict(c.to_dict()) == c
-
-
-def test_on_decode_error_policy_validated():
-    import pytest
-
-    from logsqlite_spark.config import EngineConfig
-
-    EngineConfig(on_decode_error="restart")
-    EngineConfig(on_decode_error="quarantine")
-    with pytest.raises(ValueError):
-        EngineConfig(on_decode_error="restarts")  # typo must fail loudly

@@ -79,54 +79,6 @@ def test_roundtrip_property(source, time_nano, line, partial):
     assert out.partial == partial
 
 
-def test_jvm_protobuf_decode_equals_arrow_decode(spark, tmp_path):
-    """VERDICT r12 #8: the ``from_protobuf`` JVM decode path (taken
-    automatically when spark-protobuf is on the classpath) must yield
-    the same rows as the tested Arrow-Python decoder on the same
-    spool — including the tricky shapes (partial_meta, unicode,
-    empty line).  Skips where the module isn't deployed (this
-    container); runs in any environment that ships it."""
-    import pytest
-
-    from logsqlite_spark.sources.frames import LogEntry, PartialMeta
-    from logsqlite_spark.sources.spool import (
-        SpoolWriter,
-        jvm_protobuf_available,
-        read_spool_batch,
-    )
-
-    if not jvm_protobuf_available(spark):
-        pytest.skip("spark-protobuf module not on the JVM classpath")
-
-    import glob
-    import os
-
-    w = SpoolWriter(str(tmp_path / "spool"), "cj")
-    w.write_burst([
-        LogEntry(source="stdout", time_nano=1, line=b"plain"),
-        LogEntry(source="stderr", time_nano=2, line="unié\n".encode()),
-        LogEntry(source="stdout", time_nano=3, line=b""),
-        LogEntry(source="stdout", time_nano=4, line=b"part", partial=True,
-                 partial_meta=PartialMeta(last=True, id="p1", ordinal=7)),
-    ])
-    files = sorted(glob.glob(str(tmp_path / "spool" / "*" / "*.plog")))
-
-    def rows(mode: str):
-        os.environ["SPARK_GRAFT_PLOG_DECODER"] = mode
-        try:
-            df = read_spool_batch(spark, str(tmp_path / "spool"),
-                                  paths=files)
-            return sorted(
-                (r["frame_no"], r["source"], r["time_nano"], r["line"],
-                 r["partial"], None if r["partial_meta"] is None else
-                 tuple(r["partial_meta"]))
-                for r in df.collect())
-        finally:
-            os.environ.pop("SPARK_GRAFT_PLOG_DECODER", None)
-
-    assert rows("jvm") == rows("arrow")
-
-
 @settings(max_examples=300, deadline=None)
 @given(
     source=st.text(max_size=40),

@@ -117,62 +117,18 @@ def _wait(pred, timeout=60.0, every=0.5):
     return False
 
 
-def test_t4_restart_policy_bounces_logger_on_decode_error(spark, tmp_path):
-    """T4 parity (statehandler.rs:146-166): with
-    ``on_decode_error="restart"`` a committed micro-batch that saw a
-    protobuf DecodeError restarts that container's ingest stream; data
-    already committed survives, the bad frame is quarantined, and the
-    stream keeps consuming afterwards."""
-    from pathlib import Path
-
-    from logsqlite_spark.sources.frames import encode_frame
-
-    eng = Engine(spark, EngineConfig(warehouse_dir=str(tmp_path / "wh"),
-                                     on_decode_error="restart"))
-    try:
-        _burst(eng.config.spool_dir, "ct4", 3)
-        q0 = eng.start_logging("ct4", "/run/ct4.fifo", streaming=True)
-        run_id0 = q0.runId
-
-        assert _wait(lambda: spark.read.parquet(
-            eng.config.logs_dir).count() >= 3)
-
-        # corrupt frame after a good one, via a raw spool file whose
-        # name respects the monotonic time-ns convention (a
-        # future-dated name would poison the file watermark and
-        # legitimately quarantine every later burst as out-of-order)
-        import time as _time
-
-        d = Path(eng.config.spool_dir) / "ct4"
-        good = encode_frame(LogEntry(source="stdout",
-                                     time_nano=BASE_TS + 10**11,
-                                     line=b"ok"))
-        (d / f"{_time.time_ns():020d}-999999.plog").write_bytes(
-            good + b"\x00\x00\x00\xffgarbage")
-
-        # the policy bounces the stream: new runId registered
-        assert _wait(lambda: eng._restarts.get("ct4", 0) >= 1), \
-            "restart policy never fired"
-        assert _wait(lambda: eng._queries["ct4"].runId != run_id0)
-
-        # committed rows survived; bad frame quarantined; stream live
-        _burst(eng.config.spool_dir, "ct4", 2, ts=BASE_TS + 2 * 10**11)
-        assert _wait(lambda: spark.read.parquet(
-            eng.config.logs_dir).count() >= 6)
-        assert eng.decode_errors_df().count() == 1
-    finally:
-        eng.stop_all()
-
-
 def test_t4_quarantine_policy_never_restarts(spark, tmp_path):
-    """Default policy: decode errors quarantine and the stream keeps
-    its original run — no bounce."""
+    """Decode errors on the multiplexed stream quarantine the bad
+    frame and keep the good prefix; the stream keeps its original run
+    (nothing bounces it) and goes on consuming."""
     from pathlib import Path
 
     from logsqlite_spark.sources.frames import encode_frame
 
     eng = Engine(spark, EngineConfig(warehouse_dir=str(tmp_path / "wh")))
     try:
+        eng.start_logging("cq4", "/run/cq4.fifo",
+                          {"delete_when_stopped": "false"})
         d = Path(eng.config.spool_dir) / "cq4"
         d.mkdir(parents=True, exist_ok=True)
         good = encode_frame(LogEntry(source="stdout", time_nano=BASE_TS,
@@ -180,14 +136,20 @@ def test_t4_quarantine_policy_never_restarts(spark, tmp_path):
         import time as _time
         (d / f"{_time.time_ns():020d}-000000.plog").write_bytes(
             good + b"\x00\x00\x00\xffgarbage")
-        q0 = eng.start_logging("cq4", "/run/cq4.fifo", streaming=True)
+        q0 = eng.start_multiplexed_ingest()
         run_id0 = q0.runId
         assert _wait(lambda: spark.read.parquet(
             eng.config.logs_dir).count() >= 1)
         assert _wait(lambda: eng.decode_errors_df() is not None
                      and eng.decode_errors_df().count() == 1)
-        assert eng._restarts.get("cq4", 0) == 0
-        assert eng._queries["cq4"].runId == run_id0
+        _burst(eng.config.spool_dir, "cq4", 2, ts=BASE_TS + 10**11)
+        assert _wait(lambda: spark.read.parquet(
+            eng.config.logs_dir).count() >= 3)
+        assert [r["seq"] for r in
+                eng.read_logs("cq4").orderBy("seq").collect()] == [1, 2, 3]
+        assert eng.decode_errors_df().count() == 1
+        assert q0.isActive and q0.exception() is None
+        assert eng._queries["__mux__"] is q0 and q0.runId == run_id0
     finally:
         eng.stop_all()
 
@@ -250,19 +212,17 @@ def test_follow_live_seam_catchup_to_live_no_gap_no_dup(engine):
 
 
 def test_follow_live_streaming_end_to_end(engine):
-    """follow_live over a SCOPED STREAMING ingest: a line written to
-    the spool surfaces through the commit hook without a second
-    (follow-side) trigger, and stopping the stream stops emission."""
+    """follow_live over the MULTIPLEXED streaming ingest: a line
+    written to the spool surfaces through the commit hook without a
+    second (follow-side) trigger, and stopping the follow stops
+    emission. The container registers and gets its spool dir only
+    after the stream started."""
     import threading
     import time as _t
 
-    # writer first: its __init__ creates the spool subdir the scoped
-    # readStream source lists
+    engine.start_multiplexed_ingest()
+    engine.start_logging("cw", None, {"delete_when_stopped": "false"})
     SpoolWriter(engine.config.spool_dir, "cw")
-    engine.start_logging("cw", None,
-                         {"message_read_timeout": "100",
-                          "delete_when_stopped": "false"},
-                         streaming=True)
     got: list = []
     stop_flag = threading.Event()
     it = engine.follow_live("cw", poll_interval_s=0.1,

@@ -11,8 +11,6 @@ from __future__ import annotations
 
 import random
 
-import pytest
-
 from logsqlite_spark.sources import frames as fr
 from logsqlite_spark.sources import vdecode
 
@@ -136,64 +134,3 @@ def test_unknown_fields_and_fixed_wiretypes_are_skipped():
 def test_empty_file_and_empty_batch():
     assert _rows(vdecode.decode_files(["file:/s/c/e.plog"], [b""])) == []
     assert _rows(vdecode.decode_files([], [])) == []
-
-
-def test_descriptor_set_structure_roundtrips():
-    """The hand-built FileDescriptorSet (descriptor.py) decoded with our
-    own wire codec must contain the entry.proto message tree — the
-    structural check available without a protobuf runtime."""
-    from logsqlite_spark.sources.descriptor import log_entry_descriptor_set
-
-    blob = log_entry_descriptor_set()
-
-    def read_fields(buf):
-        fields = []
-        pos = 0
-        while pos < len(buf):
-            tag, pos = fr._read_varint(buf, pos)
-            fieldno, wire = tag >> 3, tag & 7
-            if wire == 2:
-                ln, pos = fr._read_varint(buf, pos)
-                fields.append((fieldno, buf[pos:pos + ln]))
-                pos += ln
-            elif wire == 0:
-                v, pos = fr._read_varint(buf, pos)
-                fields.append((fieldno, v))
-        return fields
-
-    (fds,) = read_fields(blob)  # FileDescriptorSet.file[0]
-    file_fields = read_fields(fds[1])
-    assert (2, b"docker.logentry") in file_fields
-    assert (12, b"proto3") in file_fields
-    messages = [v for n, v in file_fields if n == 4]
-    assert len(messages) == 2
-    log_entry = read_fields(messages[0])
-    assert (1, b"LogEntry") in log_entry
-    field_names = [read_fields(v)[0][1] for n, v in log_entry if n == 2]
-    assert field_names == [b"source", b"time_nano", b"line", b"partial",
-                           b"partial_log_metadata"]
-    nested = read_fields(messages[1])
-    assert (1, b"PartialLogEntryMetadata") in nested
-
-
-def test_jvm_from_protobuf_path(spark):
-    """Exercised only where spark-protobuf is deployed (not in this
-    container) — the capability probe keeps the auto path honest."""
-    from logsqlite_spark.sources.spool import jvm_protobuf_available
-
-    if not jvm_protobuf_available(spark):
-        pytest.skip("spark-protobuf module not on the JVM classpath")
-    import os
-
-    from logsqlite_spark.sources.spool import SpoolWriter, read_spool_batch
-
-    tmp = "/tmp/jvm_plog_test"
-    os.makedirs(tmp, exist_ok=True)
-    os.environ["SPARK_GRAFT_PLOG_DECODER"] = "jvm"
-    try:
-        w = SpoolWriter(tmp, "c1")
-        w.write_burst(_entries(50, partial_every=10))
-        rows = read_spool_batch(spark, tmp).collect()
-        assert len(rows) == 50
-    finally:
-        os.environ.pop("SPARK_GRAFT_PLOG_DECODER", None)

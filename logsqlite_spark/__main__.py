@@ -11,8 +11,9 @@
         [--container ID] [--gc]
     python -m logsqlite_spark gc     --warehouse DIR [--keep N]
 
-``serve`` is the reference's main(): replay registered containers, bind
-the LogDriver unix socket, run until interrupted (main.rs:82-110).
+``serve`` is the reference's main(): bind the LogDriver unix socket and
+run until interrupted (main.rs:82-110); registrations persist in the
+state store, so there is nothing to replay per container.
 ``--streaming`` also runs the multiplexed ingest stream, which ingests
 every container's ``.plog`` spool, including containers that send
 StartLogging after boot.
@@ -42,7 +43,7 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="logsqlite_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    sv = sub.add_parser("serve", help="replay + LogDriver socket daemon")
+    sv = sub.add_parser("serve", help="LogDriver socket daemon")
     sv.add_argument("--warehouse", required=True)
     sv.add_argument("--socket", required=True)
     sv.add_argument("--streaming", action="store_true",
@@ -91,7 +92,6 @@ def main(argv: list[str] | None = None) -> int:
     eng = _engine(a.warehouse)
 
     if a.cmd == "serve":
-        eng.replay()
         if a.streaming:
             eng.start_multiplexed_ingest()
         srv = eng.serve_logdriver(a.socket)

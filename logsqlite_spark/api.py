@@ -92,8 +92,11 @@ class Engine:
         """Register a container. Its spool is ingested by the
         multiplexed stream (:meth:`start_multiplexed_ingest`), which
         picks up containers registered after it started, or by
-        :meth:`ingest_once` pulls."""
-        self.state.upsert(container_id, fifo, LogConfig.from_options(options))
+        :meth:`ingest_once` pulls.  A container that
+        :meth:`stop_logging` dropped commits again from here on."""
+        conf = LogConfig.from_options(options)
+        self.table.readmit_container(container_id)
+        self.state.upsert(container_id, fifo, conf)
 
     def start_multiplexed_ingest(self, conf: LogConfig | None = None,
                                  fmt: str = "plog"):
@@ -254,7 +257,11 @@ class Engine:
 
     def stop_logging(self, container_id: str) -> None:
         """Drop state; delete data if configured
-        (statehandler.rs:173-182 delete_when_stopped)."""
+        (statehandler.rs:173-182 delete_when_stopped).  The drop is a
+        manifest commit that tombstones the container, so rows the
+        running stream or a pull read before it — and spool files
+        that arrive after it — are never committed, until the
+        container is registered again (:meth:`start_logging`)."""
         doc = self.state.get(container_id)
         self.state.remove(container_id)
         if doc and doc["log_conf"].get("delete_when_stopped"):

@@ -29,7 +29,6 @@ deleted later by ``ManifestTable.gc`` on the cleaner cadence.
 
 from __future__ import annotations
 
-import shutil
 from datetime import datetime, timezone
 from pathlib import Path
 
@@ -234,19 +233,17 @@ def drop_container(logs_dir: str, container_id: str) -> bool:
     """``delete_when_stopped`` — the reference deletes the SQLite file
     (statehandler.rs:176-181); here we drop every manifest reference to
     the container (O(1) metadata) and reclaim the bytes immediately —
-    readers of a *dropped* container losing their snapshot matches the
-    reference removing the DB file out from under a reader."""
+    see ``ManifestTable.drop_container``.  True if the container had
+    referenced files or a partition dir."""
+    root = (Path(logs_dir)
+            / f"container_id={escape_partition_value(container_id)}")
+    had_dir = root.exists()
     table = open_table(logs_dir)
     dropped = 0
     if table.exists() or Path(logs_dir).exists():
         table.import_existing()
         dropped = table.drop_container(container_id)
-    root = (Path(logs_dir)
-            / f"container_id={escape_partition_value(container_id)}")
-    if root.exists():
-        shutil.rmtree(root)
-        return True
-    return dropped > 0
+    return had_dir or dropped > 0
 
 
 def erase_matching(

@@ -20,7 +20,9 @@ explicit in the record (the protobuf path gets it from frame position).
 
 from __future__ import annotations
 
+import decimal
 import json
+import math
 import os
 import time
 from pathlib import Path
@@ -56,16 +58,53 @@ def _int_ok(v, bounds) -> bool:
     return v is None or (type(v) is int and bounds[0] <= v <= bounds[1])
 
 
-def _text(v) -> str | None:
-    """A JSON value read into a string field, rendered the way
-    ``from_json`` renders it (non-strings become their JSON text)."""
-    if v is None or isinstance(v, str):
-        return v
+def _java_double(x: float) -> str:
+    """A double as Jackson writes it: Java's ``Double.toString`` layout
+    (plain for 1e-3 <= |x| < 1e7, else ``d.dddE<n>``), non-finite
+    values as quoted strings.  The digits are Python's shortest
+    round-trip ones, so a few doubles still differ from what ingest
+    commits: Jackson parses some large exponents one ulp off
+    (``1.0e23`` is committed as ``9.999999999999999E22``), and the
+    JVM's ``Double.toString`` (before JDK 19) prints some doubles with
+    extra digits (``2.82879384806159008E17``, ``4.9E-324``)."""
+    if x != x:
+        return '"NaN"'
+    if x in (float("inf"), float("-inf")):
+        return '"Infinity"' if x > 0 else '"-Infinity"'
+    sign = "-" if math.copysign(1.0, x) < 0 else ""
+    d = decimal.Decimal(repr(abs(x)))
+    if d == 0 or 1e-3 <= abs(x) < 1e7:
+        plain = format(d, "f")
+        return sign + (plain if "." in plain else plain + ".0")
+    digits = "".join(map(str, d.as_tuple().digits)).rstrip("0")
+    exp = d.adjusted()
+    return f"{sign}{digits[0]}.{digits[1:] or '0'}E{exp}"
+
+
+def _json_text(v) -> str:
+    if v is None:
+        return "null"
     if isinstance(v, bool):
         return "true" if v else "false"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
+    if isinstance(v, float):
+        return _java_double(v)
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, str):
+        return json.dumps(v, ensure_ascii=False)
+    if isinstance(v, list):
+        return "[" + ",".join(map(_json_text, v)) + "]"
+    return "{" + ",".join(f"{json.dumps(k, ensure_ascii=False)}:"
+                          f"{_json_text(x)}" for k, x in v.items()) + "}"
+
+
+def _text(v) -> str | None:
+    """A JSON value read into a string field, rendered the way
+    ``from_json`` renders it: a non-string becomes its compact JSON
+    text, with doubles as :func:`_java_double` writes them."""
+    if v is None or isinstance(v, str):
+        return v
+    return _json_text(v)
 
 
 def parse_jsonl_line(ln: str) -> tuple | None:

@@ -57,10 +57,10 @@ DECODE_ERROR_SOURCE = "__decode_error__"
 # ingest_100k_lines. v2 moves each file once, at task commit. The
 # usual v2 caveat (a failed/speculative task can leave committed files
 # behind) is NEUTRALIZED by this pipeline's own design: publication is
-# the MANIFEST commit, not the filesystem — `adopt_staged` runs only
-# after a fully-successful write job into a per-batch unique staging
-# dir, and a failed job's staging dir is discarded wholesale, never
-# adopted (the crash-safety soaks exercise exactly this seam).
+# the MANIFEST commit, not the filesystem — staged files move into the
+# tree only after a fully-successful write job into a per-batch unique
+# staging dir, and a failed job's staging dir is discarded wholesale,
+# never moved (the crash-safety soaks exercise exactly this seam).
 _COMMITTER_ALGO = "2"
 
 
@@ -180,11 +180,13 @@ def _write_batch(batch_df: DataFrame, logs_dir: str, state_dir: str,
     - ``listing``: the exact spool file list a pull read, used only
       by the read-coverage guard below.
 
-    The append is exactly-once: rows land in the table's staging dir,
-    get adopted (moved, still unreferenced), and become visible in ONE
-    manifest commit together with the seq high-water, spool watermark,
-    and batch id. Replays abort inside the commit's critical section,
-    so a crash at any point here never duplicates rows.  Every guard
+    The append is exactly-once: rows land in the table's staging dir
+    and, inside ONE manifest commit's critical section, move into the
+    tree and become visible together with the seq high-water, spool
+    watermark, and batch id. Replays abort inside that critical
+    section, so a crash at any point here never duplicates rows.
+    Rows of a container dropped since the batch was read stay out of
+    the commit (``ManifestTable.commit_append``).  Every guard
     that fails aborts before the commit: nothing is consumed, no
     watermark moves, and the next pull (or the replayed micro-batch)
     retries the same files.
@@ -270,13 +272,14 @@ def _write_batch(batch_df: DataFrame, logs_dir: str, state_dir: str,
             return {"rows": 0, "decode_errors": 0, "batch_id": batch_id}
 
         increments: dict[str, int] = {}
+        file_rows: dict[str, int] = {}
         for f in staging.rglob("*.parquet"):
             # staged dirs carry Spark's Hive-escaped cid (':' -> %3A …);
             # watermark keys must be the RAW cid assign_seq looks up
-            part = f.relative_to(staging).parts[0]
-            cid = unescape_partition_value(part.split("=", 1)[1])
-            increments[cid] = increments.get(cid, 0) + _parquet_num_rows(
-                str(f))
+            rel = f.relative_to(staging)
+            cid = unescape_partition_value(rel.parts[0].split("=", 1)[1])
+            n = file_rows[str(rel)] = _parquet_num_rows(str(f))
+            increments[cid] = increments.get(cid, 0) + n
         increments = {c: n for c, n in increments.items() if n}
         n_rows = sum(increments.values())
         # WRITE-COVERAGE GUARD (same soak finding, other side): if the
@@ -311,21 +314,25 @@ def _write_batch(batch_df: DataFrame, logs_dir: str, state_dir: str,
                 .select("path", "container_id", "line"),
                 str(Path(state_dir) / "decode_errors"), n_errors,
                 "decode-error")
-        new_files = table.adopt_staged(staging)
+        top_files: dict[str, str] = {}
+        for p, is_stale in paths:
+            cid = os.path.basename(os.path.dirname(p))
+            if not is_stale and p > top_files.get(cid, ""):
+                top_files[cid] = p
+        # the staged files move into the tree inside the commit's
+        # critical section, which also leaves out the rows of a
+        # container dropped since this batch was read
+        committed = table.commit_append(sorted(file_rows), scope, batch_id,
+                                        increments, top_files,
+                                        staging=staging)
     finally:
         # every abort above leaves nothing in the table's data tree
         shutil.rmtree(staging, ignore_errors=True)
-    top_files: dict[str, str] = {}
-    for p, is_stale in paths:
-        cid = os.path.basename(os.path.dirname(p))
-        if not is_stale and p > top_files.get(cid, ""):
-            top_files[cid] = p
-    committed = table.commit_append(new_files, scope, batch_id,
-                                    increments, top_files)
     if committed is None:  # concurrent replay won the commit
         return {"skipped_replay": True, "batch_id": batch_id}
+    new_files = committed["appended"]
     return {
-        "rows": n_rows,
+        "rows": sum(file_rows[f] for f in new_files),
         "decode_errors": n_errors,
         "out_of_order_rows": n_stale if on_stale == "quarantine" else 0,
         "batch_id": batch_id,

@@ -35,13 +35,16 @@ Manifest::
      "files": [relative paths...],          # THE live file set
      "batch_ids": {scope: last_committed},  # exactly-once per stream
      "high_water": {container: max_seq},    # ROWID parity state
-     "last_file": {container: spool_name}}  # spool replay watermark
+     "last_file": {container: spool_name},  # spool replay watermark
+     "dropped": [container, ...]}           # drop tombstones
 
 Invariants:
 - Data files are immutable once referenced; removal = dropping the
   reference. Physical deletion happens only in :meth:`gc`, which keeps
   every file referenced by the last ``keep_generations`` manifests —
-  an in-flight reader holding a recent snapshot never 404s.
+  an in-flight reader holding a recent snapshot never 404s — and in
+  :meth:`drop_container`, which deletes a dropped container's files
+  at once, like the reference deleting its database file.
 - Commits serialize on the lock and re-apply against the *latest*
   manifest, so a maintenance rewrite commits "snapshot minus rewritten
   plus replacement" and preserves files appended concurrently.
@@ -71,6 +74,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from pathlib import Path
@@ -517,25 +521,36 @@ class ManifestTable:
         (invisible, GC-able) until a subsequent :meth:`commit` lists
         them — adoption is not publication.
         """
-        moved: list[str] = []
-        for f in sorted(staging_dir.rglob("*.parquet")):
-            rel = f.relative_to(staging_dir)
-            dest = self.dir / rel
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            os.rename(f, dest)
-            moved.append(str(rel))
-        import shutil
-
+        moved = sorted(str(f.relative_to(staging_dir))
+                       for f in staging_dir.rglob("*.parquet"))
+        self._move_into_tree(staging_dir, moved)
         shutil.rmtree(staging_dir, ignore_errors=True)
         return moved
 
+    def _move_into_tree(self, staging_dir: Path, rels: list[str]) -> None:
+        for rel in rels:
+            dest = self.dir / rel
+            dest.parent.mkdir(parents=True, exist_ok=True)
+            os.rename(staging_dir / rel, dest)
+
     def commit_append(self, new_files: list[str], scope: str, batch_id: int | None,
                       seq_increments: dict[str, int],
-                      last_files: dict[str, str]) -> dict | None:
+                      last_files: dict[str, str],
+                      staging: Path | None = None) -> dict | None:
         """Exactly-once append: data files + seq/batch state in ONE
         atomic commit (the transactionality the reference gets from
         SQLite transactions). Returns None when the batch was already
         committed (crash replay).
+
+        With ``staging``, ``new_files`` are paths relative to that
+        staging dir and are moved into the live tree INSIDE the
+        commit's critical section, after the replay check — the one
+        lock also orders them against :meth:`drop_container`.  Files,
+        seq increments and spool watermarks of a container with a drop
+        tombstone are left out (its staged files stay in ``staging``
+        for the caller to discard), so a batch read before the drop
+        can never bring the container's rows back.  The returned
+        head's ``appended`` lists the files this commit referenced.
 
         O(batch + #chunks) in TIME AND MEMORY (round-13: the r12
         chunked persistence had already made the BYTES O(batch), but
@@ -551,6 +566,16 @@ class ManifestTable:
             if batch_id is not None and \
                     batch_id <= head.get("batch_ids", {}).get(scope, -1):
                 return None
+            dropped = set(head.get("dropped", ()))
+            if dropped:
+                new_files = [f for f in new_files
+                             if _cid_of_rel(f) not in dropped]
+                seq_increments = {c: n for c, n in seq_increments.items()
+                                  if c not in dropped}
+                last_files = {c: p for c, p in last_files.items()
+                              if c not in dropped}
+            if staging is not None:
+                self._move_into_tree(staging, new_files)
             gen = head["generation"] + 1
             chunk_names, stats, n_files = self._head_chunks(head, gen)
             if new_files:
@@ -586,7 +611,7 @@ class ManifestTable:
                 old = lf.get(cid)
                 lf[cid] = name if old is None or name > old else old
             new_head["last_file"] = lf
-            return self._publish(new_head)
+            return {**self._publish(new_head), "appended": new_files}
         finally:
             self._release_lock()
 
@@ -595,6 +620,7 @@ class ManifestTable:
                          new_files: list[str],
                          extra_head_fn: Callable[[dict], None] | None = None,
                          expect_removed: int | None = None,
+                         after_publish: Callable[[], None] | None = None,
                          ) -> tuple[dict, int]:
         """Shared chunk-pruned replace: drop files matching ``drop``
         from chunks whose stats intersect ``touched_dirs``, append
@@ -613,7 +639,10 @@ class ManifestTable:
         ``expect_removed`` inputs are still live, the commit raises
         :class:`CommitConflict` before publishing (staged chunks/files
         stay unreferenced; gc reclaims them); the caller recomputes
-        from a fresh snapshot, typically on its next cadence pass."""
+        from a fresh snapshot, typically on its next cadence pass.
+
+        ``after_publish`` runs once the new head is published, still
+        under the commit lock."""
         head = self._begin()
         try:
             gen = head["generation"] + 1
@@ -660,7 +689,10 @@ class ManifestTable:
                 n_files=n_files)
             if extra_head_fn is not None:
                 extra_head_fn(new_head)
-            return self._publish(new_head), n_removed
+            published = self._publish(new_head)
+            if after_publish is not None:
+                after_publish()
+            return published, n_removed
         finally:
             self._release_lock()
 
@@ -815,10 +847,20 @@ class ManifestTable:
 
     def drop_container(self, container_id: str) -> int:
         """delete_when_stopped parity (statehandler.rs:176-181): drop
-        every reference to the container's files; space returns on the
-        next :meth:`gc`.  Chunk-pruned like :meth:`commit_replace`:
-        chunks whose dir summary has no dir under the container's
-        partition prefix pass through by name."""
+        every reference to the container's files, clear its seq and
+        spool watermarks, and tombstone it.  Chunk-pruned like
+        :meth:`commit_replace`: chunks whose dir summary has no dir
+        under the container's partition prefix pass through by name.
+
+        The tombstone makes every later :meth:`commit_append` leave
+        the container out until :meth:`readmit_container` — so rows a
+        running stream or pull read before the drop are never
+        committed after it.  The container's partition dir is deleted
+        right after the publish, still under the commit lock: appends
+        move files into the tree under that lock too, so none is
+        half-way into the dir being removed.  Readers of a *dropped*
+        container losing their snapshot matches the reference removing
+        the DB file out from under a reader."""
         prefix = f"container_id={escape_partition_value(container_id)}/"
         bare = f"container_id={escape_partition_value(container_id)}"
 
@@ -832,6 +874,8 @@ class ManifestTable:
             head["last_file"] = {k: v for k, v in
                                  head.get("last_file", {}).items()
                                  if k != container_id}
+            head["dropped"] = sorted(set(head.get("dropped", ()))
+                                     | {container_id})
 
         # a chunk is touched iff any of its dirs belongs to the
         # container — encode that as the touched-dirs test by matching
@@ -841,9 +885,42 @@ class ManifestTable:
                 return not any(d == bare or d.startswith(prefix)
                                for d in dirs)
 
+        def purge() -> None:
+            shutil.rmtree(self.dir / bare, ignore_errors=True)
+
         _, n_removed = self._commit_filtered(
-            _PrefixDirs(), in_container, [], extra_head_fn=scrub_state)
+            _PrefixDirs(), in_container, [], extra_head_fn=scrub_state,
+            after_publish=purge)
         return n_removed
+
+    def readmit_container(self, container_id: str) -> None:
+        """Lift :meth:`drop_container`'s tombstone (the container
+        registered again); a no-op, with no new generation, when the
+        container has none."""
+        if container_id not in self._read_head().get("dropped", ()):
+            return  # the common case takes no lock
+        head = self._begin()
+        try:
+            dropped = head.get("dropped", [])
+            if container_id not in dropped:
+                return
+            new_head = {k: v for k, v in head.items() if k != "files"}
+            new_head.update(
+                generation=head["generation"] + 1,
+                committed_at=time.time(),
+                dropped=[c for c in dropped if c != container_id])
+            self._publish(new_head)
+        finally:
+            self._release_lock()
+
+
+def _cid_of_rel(rel: str) -> str:
+    """Owning container of a data file's relative path ('' for files
+    outside the partition layout)."""
+    first = rel.split("/", 1)[0]
+    if first.startswith("container_id="):
+        return unescape_partition_value(first[len("container_id="):])
+    return ""
 
 
 def _gc_data_walk(root: Path, referenced: set[str], grace_s: float,
@@ -901,8 +978,6 @@ def _gc_data_walk(root: Path, referenced: set[str], grace_s: float,
             except FileNotFoundError:
                 continue  # peer collected it mid-pass
             if expired:
-                import shutil
-
                 shutil.rmtree(d, ignore_errors=True)
     return deleted
 
@@ -1042,17 +1117,8 @@ class ShardedManifestTable:
     def shard_for_container(self, container_id: str) -> int:
         return _shard_of(container_id, self.n)
 
-    @staticmethod
-    def _cid_of_rel(rel: str) -> str:
-        """Owning container of a data file's relative path ('' for
-        files outside the partition layout — routed to shard 0)."""
-        first = rel.split("/", 1)[0]
-        if first.startswith("container_id="):
-            return unescape_partition_value(first[len("container_id="):])
-        return ""
-
     def _shard_of_rel(self, rel: str) -> int:
-        return _shard_of(self._cid_of_rel(rel), self.n)
+        return _shard_of(_cid_of_rel(rel), self.n)
 
     # -- scope watermarks (batch exactly-once) --------------------------------
     #
@@ -1205,9 +1271,12 @@ class ShardedManifestTable:
     def commit_append(self, new_files: list[str], scope: str,
                       batch_id: int | None,
                       seq_increments: dict[str, int],
-                      last_files: dict[str, str]) -> dict | None:
+                      last_files: dict[str, str],
+                      staging: Path | None = None) -> dict | None:
         """Per-shard fan-out append; authoritative shard LAST (the
-        exactly-once rule in the module-section comment)."""
+        exactly-once rule in the module-section comment).  Each shard
+        moves its own group out of ``staging`` under its own lock —
+        the lock its containers' drops take."""
         groups = self._group_by_shard(new_files, seq_increments,
                                       last_files)
         if batch_id is not None and batch_id <= self._scope_batch(scope):
@@ -1215,14 +1284,17 @@ class ShardedManifestTable:
         committed_any = False
         hw: dict = {}
         lf: dict = {}
+        appended: list[str] = []
         for k in sorted(groups):
             grp = groups[k]
             res = self.shards[k].commit_append(
-                grp["files"], scope, batch_id, grp["incs"], grp["lf"])
+                grp["files"], scope, batch_id, grp["incs"], grp["lf"],
+                staging=staging)
             if res is not None:
                 committed_any = True
                 hw.update(res.get("high_water", {}))
                 lf.update(res.get("last_file", {}))
+                appended += res["appended"]
         if batch_id is not None:
             # completion watermark LAST — the whole fan-out is now
             # durable, so the replay pre-check may say "committed"
@@ -1239,7 +1311,7 @@ class ShardedManifestTable:
         # consume (follow seams, ingest results); merging all N shards
         # here would put O(N) head reads on every commit's critical
         # path for state no caller reads
-        out = {"high_water": hw, "last_file": lf,
+        out = {"high_water": hw, "last_file": lf, "appended": appended,
                "batch_ids": ({scope: batch_id}
                              if batch_id is not None else {})}
         return out
@@ -1295,6 +1367,10 @@ class ShardedManifestTable:
     def drop_container(self, container_id: str) -> int:
         return self.shards[self.shard_for_container(container_id)] \
             .drop_container(container_id)
+
+    def readmit_container(self, container_id: str) -> None:
+        self.shards[self.shard_for_container(container_id)] \
+            .readmit_container(container_id)
 
     # -- maintenance ----------------------------------------------------------
 

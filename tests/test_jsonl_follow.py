@@ -120,8 +120,9 @@ def test_follow_tail_skips_exactly_the_lines_ingest_quarantines(spark,
                                                                 warehouse):
     """The spool tail decodes JSONL on the driver; on a file mixing
     good records with lines ingest quarantines (non-objects, wrongly
-    typed fields) it emits the same rows, with the same seqs, as a
-    pull then commits — and the bad lines do not end the follow."""
+    typed fields) and numbers read into the string ``line`` field, it
+    emits the same rows, with the same seqs and text, as a pull then
+    commits — and the bad lines do not end the follow."""
     import json
     from pathlib import Path
 
@@ -142,6 +143,8 @@ def test_follow_tail_skips_exactly_the_lines_ingest_quarantines(spark,
         '{"n":14,"line":"pm","partial":true,'
         '"partial_meta":{"last":true,"id":"p","ordinal":2,"zz":1}}',
         good[3],
+        '{"n":15,"line":1e20}', '{"n":16,"line":NaN}',
+        '{"n":17,"line":{"a":[1e-7,2.5e7,true]}}',
     ], compress=False)
 
     def key(r):
@@ -157,5 +160,6 @@ def test_follow_tail_skips_exactly_the_lines_ingest_quarantines(spark,
     committed = [key(r) for r in
                  eng.read_logs("cj").orderBy("seq").collect()]
     assert [k[3] for k in committed] == [
-        "g0\n", "g1\n", "g2\n", "g3\n", "5\n", "tail-junk\n", "pm\n"]
+        "g0\n", "g1\n", "g2\n", "g3\n", "5\n", "tail-junk\n", "pm\n",
+        "1.0E20\n", '"NaN"\n', '{"a":[1.0E-7,2.5E7,true]}\n']
     assert tailed == committed

@@ -75,6 +75,81 @@ def test_engine_delete_when_stopped(engine):
     assert left.select("container_id").distinct().collect()[0][0] == "c2"
     assert left.count() == 2
 
+
+def _committed(eng):
+    """(container_id, seq) pairs of a full-table read, after checking
+    that every file the manifest references exists."""
+    assert all(os.path.exists(f) for f in eng.table.data_files())
+    return sorted((r["container_id"], r["seq"]) for r in
+                  eng.logs_df().select("container_id", "seq").collect())
+
+
+def test_stop_logging_drops_container_under_multiplexed_stream(engine):
+    """StopLogging with delete_when_stopped while the multiplexed
+    stream runs: the container's unconsumed spool files and one
+    written after the stop are never committed, the table stays
+    readable, and a later StartLogging commits again from seq 1."""
+    spool = engine.config.spool_dir
+    q = engine.start_multiplexed_ingest()
+    engine.start_logging("cd")  # default: delete on stop
+    engine.start_logging("ck", None, {"delete_when_stopped": "false"})
+    _burst(spool, "cd", 3)
+    _burst(spool, "ck", 2)
+    q.processAllAvailable()
+    assert _committed(engine) == [("cd", 1), ("cd", 2), ("cd", 3),
+                                  ("ck", 1), ("ck", 2)]
+    _burst(spool, "cd", 2, ts=BASE_TS + 10**11)  # not consumed yet
+    engine.stop_logging("cd")
+    _burst(spool, "cd", 1, ts=BASE_TS + 2 * 10**11)
+    _burst(spool, "ck", 1, ts=BASE_TS + 2 * 10**11)
+    q.processAllAvailable()
+    assert _committed(engine) == [("ck", 1), ("ck", 2), ("ck", 3)]
+    assert "cd" not in engine.table.head()["high_water"]
+
+    engine.start_logging("cd", None, {"delete_when_stopped": "false"})
+    _burst(spool, "cd", 2, ts=BASE_TS + 3 * 10**11)
+    q.processAllAvailable()
+    assert [s for c, s in _committed(engine) if c == "cd"] == [1, 2]
+    assert q.isActive
+
+
+@pytest.mark.parametrize("shards", [1, 4])
+def test_stop_logging_between_read_and_commit(spark, tmp_path, monkeypatch,
+                                              shards):
+    """A drop that lands after a batch was read and staged but before
+    it commits: the batch commits only the other containers' rows,
+    the dropped container's staged files never enter the data tree,
+    and the table stays readable."""
+    from logsqlite_spark.streaming import ingest as ING
+
+    eng = Engine(spark, EngineConfig(warehouse_dir=str(tmp_path / "wh"),
+                                     manifest_shards=shards))
+    spool = eng.config.spool_dir
+    eng.start_logging("cr")  # default: delete on stop
+    eng.start_logging("ck", None, {"delete_when_stopped": "false"})
+    _burst(spool, "ck", 1)
+    eng.ingest_once()
+    _burst(spool, "cr", 3)
+    _burst(spool, "ck", 2, ts=BASE_TS + 10**11)
+
+    real = ING._parquet_num_rows
+    stopped: list = []
+
+    def stop_then_count(path):
+        if not stopped:
+            stopped.append(1)
+            eng.stop_logging("cr")
+        return real(path)
+
+    monkeypatch.setattr(ING, "_parquet_num_rows", stop_then_count)
+    res = eng.ingest_once()
+    assert stopped and res["rows"] == 2
+    assert all(f.startswith("container_id=ck/") for f in res["new_files"])
+    assert _committed(eng) == [("ck", 1), ("ck", 2), ("ck", 3)]
+    assert not (tmp_path / "wh" / "logs" / "container_id=cr").exists()
+    assert not any((tmp_path / "wh" / "logs" / "_staging").rglob("*"))
+    assert os.listdir(os.path.join(spool, "cr")) == []  # consumed
+
 def test_engine_replay_restores_registrations(spark, engine):
     engine.start_logging("c1", "/fifo/c1")
     engine.start_logging("c2", "/fifo/c2")

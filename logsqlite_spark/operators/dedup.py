@@ -445,8 +445,13 @@ def two_stage_dedup(docs: DataFrame, emb: DataFrame,
     no corpus-wide token shuffle at all.
 
     ``method`` is stage 1's candidate generation (see
-    :func:`~logsqlite_spark.operators.similarity.embedding_dedup_pairs`);
-    ``"exact"`` makes the whole pipeline oracle-checkable.
+    :func:`~logsqlite_spark.operators.similarity.embedding_dedup_pairs`).
+    The default ``"lsh"`` is the banded sign-LSH sized from n: a few
+    candidates per document, and a pair of cosine ≥ 0.98 is missed with
+    probability ≤ 1e-6, so its confirmed near copies match those of
+    ``"exact"`` (all pairs, O(n²)); ``"exact"`` makes the whole
+    pipeline oracle-checkable.  Pairs between ``cos_threshold`` and
+    0.98 are candidates only by chance.
     """
     from logsqlite_spark.operators.similarity import embedding_dedup_pairs
 

@@ -11,9 +11,11 @@ cannot be a window function; the distributed shape is:
    sampling.py) — packs never span buckets, so buckets pack
    independently and in parallel. Bucket count scales with the
    cluster; each bucket's work is O(docs-in-bucket).
-2. **applyInPandas per bucket**: sort by doc_id (deterministic), run
-   the greedy fill in vectorized pandas. State is one running counter
-   per bucket — nothing accumulates.
+2. **One streaming pass per partition**: hash-partition by bucket,
+   sort by (bucket, doc_id) (deterministic), and run the greedy fill
+   over the sorted rows in ``mapInArrow``, resetting at each change of
+   bucket. State is one running counter — no bucket is ever held in
+   memory as a frame.
 
 Output is (doc_id → pack_id, offset) so the actual concatenation can
 stay lazy / zero-copy downstream. Deterministic: same corpus, same
@@ -57,8 +59,6 @@ def pack_sequences(docs: DataFrame, budget: int = 2048,
     pipeline.py MIN_TOKENS). The SQL oracle replays exactly this
     fill-based walk.
     """
-    import pandas as pd
-
     bucket = F.expr(
         "cast(conv(substr(md5(concat('{salt}:', cast({id} as string))), "
         "1, 15), 16, 10) as bigint) % {n}".format(
@@ -67,46 +67,51 @@ def pack_sequences(docs: DataFrame, budget: int = 2048,
     toks = F.expr(
         f"size(filter(split({text_col}, ' '), t -> t != ''))").cast("int")
     # NOT rebalanced (r16, measured): the tokenize+md5 projection is
-    # cheap and the groupBy(bucket) exchange right below already
-    # spreads the pandas walk — adding a round-robin exchange ahead of
-    # it was 1.3x slower at sf0.1 (noop A/B 0.66 -> 0.86 s).
+    # cheap and the repartition(bucket) exchange right below already
+    # spreads the walk — adding a round-robin exchange ahead of it was
+    # 1.3x slower at sf0.1 (noop A/B 0.66 -> 0.86 s).
     prepped = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col(id_col).cast("long").alias("doc_id"),
         bucket.alias("bucket"),
         toks.alias("token_count"),
     )
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        b = int(pdf["bucket"].iloc[0])
-        pack_ids, offsets, truncs = [], [], []
-        cur_pack, cur_fill = 0, 0
-        for tc in pdf["token_count"]:
-            tc = int(tc)
-            if tc > budget:
-                # oversized: own pack, flagged
-                if cur_fill > 0:
-                    cur_pack += 1
-                pack_ids.append(cur_pack)
-                offsets.append(0)
-                truncs.append(True)
-                cur_pack += 1
-                cur_fill = 0
-                continue
-            if cur_fill + tc > budget:
-                cur_pack += 1
-                cur_fill = 0
-            pack_ids.append(cur_pack)
-            offsets.append(cur_fill)
-            truncs.append(False)
-            cur_fill += tc
-        pdf["pack_id"] = [(b << 40) | p for p in pack_ids]
-        pdf["offset"] = offsets
-        pdf["truncated"] = truncs
-        return pdf[["doc_id", "bucket", "pack_id", "offset",
-                    "token_count", "truncated"]]
+    def walk(batches):
+        import pyarrow as pa
 
-    return prepped.groupBy("bucket").applyInPandas(pack, _PACKED_SCHEMA)
+        # one greedy fill per bucket: rows arrive sorted by (bucket,
+        # doc_id), and a partition holds whole buckets, so the state
+        # resets at each change of bucket and carries across batches
+        b, cur_pack, cur_fill = None, 0, 0
+        for batch in batches:
+            buckets = batch.column("bucket").to_pylist()
+            pack_ids, offsets, truncs = [], [], []
+            for bk, tc in zip(buckets,
+                              batch.column("token_count").to_pylist()):
+                if bk != b:
+                    b, cur_pack, cur_fill = bk, 0, 0
+                if cur_fill > 0 and cur_fill + tc > budget:
+                    cur_pack, cur_fill = cur_pack + 1, 0
+                pack_ids.append((b << 40) | cur_pack)
+                offsets.append(cur_fill)
+                truncs.append(tc > budget)
+                if tc > budget:
+                    # oversized: own pack, flagged
+                    cur_pack, cur_fill = cur_pack + 1, 0
+                else:
+                    cur_fill += tc
+            yield pa.record_batch(
+                [batch.column("doc_id"), batch.column("bucket"),
+                 pa.array(pack_ids, pa.int64()),
+                 pa.array(offsets, pa.int32()),
+                 batch.column("token_count"),
+                 pa.array(truncs, pa.bool_())],
+                names=["doc_id", "bucket", "pack_id", "offset",
+                       "token_count", "truncated"])
+
+    return (prepped.repartition("bucket")
+            .sortWithinPartitions("bucket", "doc_id")
+            .mapInArrow(walk, _PACKED_SCHEMA))
 
 
 def pack_stats(packed: DataFrame, budget: int = 2048) -> DataFrame:

@@ -47,8 +47,9 @@ def prepare_corpus(docs: DataFrame, emb: DataFrame,
                    method: str = "lsh") -> DataFrame:
     """The surviving corpus: cleaned text + split label per document.
 
-    ``method`` is the near-dup candidate generator ("lsh" at scale,
-    "exact" for oracle validation — see two_stage_dedup).
+    ``method`` is the near-dup candidate generator: "lsh" at scale (a
+    banded sign-LSH sized from n, a few candidates per document),
+    "exact" for oracle validation (all pairs) — see two_stage_dedup.
     """
     # chain entry: the regex/shingle/token work downstream is CPU-bound
     # and a one-file local corpus scan would pin it to one task
@@ -125,10 +126,15 @@ def write_prepared_corpus(docs: DataFrame, emb: DataFrame, out_dir: str,
     reader-safety contract the log table gets (table.py), now
     protecting the training-set handoff.
 
-    Returns {rows, files, split_counts}. Partitioning by ``split``
+    Returns {rows, files, split_counts} of this write, counted from the
+    written files' footers. Partitioning by ``split``
     means a trainer's ``split = 'train'`` filter prunes whole
     directories at the scan.
     """
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
     from logsqlite_spark.table import ManifestTable
 
     corpus = prepare_corpus(docs, emb, min_tokens, method)
@@ -139,11 +145,12 @@ def write_prepared_corpus(docs: DataFrame, emb: DataFrame, out_dir: str,
     new_files = table.adopt_staged(staging)
     table.commit_append(new_files, scope="corpus", batch_id=None,
                         seq_increments={}, last_files={})
-    spark = docs.sparkSession
-    out = table.read_df(spark)
-    counts = {r["split"]: r["n"] for r in
-              out.groupBy("split").agg(F.count(F.lit(1)).alias("n"))
-              .collect()}
+    # rows per split from the adopted files' footers: no Spark job
+    counts: dict[str, int] = {}
+    for rel in new_files:
+        split = Path(rel).parent.name.removeprefix("split=")
+        counts[split] = (counts.get(split, 0)
+                         + pq.read_metadata(table.dir / rel).num_rows)
     return {"rows": sum(counts.values()), "files": len(new_files),
             "split_counts": counts}
 

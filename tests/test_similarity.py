@@ -44,13 +44,71 @@ def test_embedding_dedup_pairs_finds_planted(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     expected = {(0, 1), (0, 3), (1, 3)}
     # every candidate-generation method must surface the planted dups;
-    # exact is the oracle path, lsh_portable the default, ml-lsh and
-    # ivf the other ANN generators
-    for method in ("exact", "lsh_portable", "lsh", "ivf"):
+    # exact is the oracle path, lsh_portable the default, lsh the
+    # corpus chain's n-sized banding
+    for method in ("exact", "lsh_portable", "lsh"):
         pairs = {(r["a_id"], r["b_id"]) for r in
                  embedding_dedup_pairs(emb, threshold=0.95,
-                                       method=method, n_clusters=2).collect()}
+                                       method=method).collect()}
         assert pairs == expected, method
+
+
+def _near_dup_corpus(spark, n, seed, dim=64, vocab=2000):
+    """Seeded corpus with planted near copies: random unit embeddings;
+    a copy is its source's vector plus 0.02 noise per dimension
+    (cosine about 0.987) and its Zipf token text with about 5 % of the
+    tokens replaced."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    n_src = n * 7 // 8
+    vec = rng.standard_normal((n_src, dim))
+    vec /= np.linalg.norm(vec, axis=1, keepdims=True)
+    p = 1.0 / np.arange(1, vocab + 1) ** 1.05
+    p /= p.sum()
+    toks = [rng.choice(vocab, size=int(rng.integers(20, 80)), p=p)
+            for _ in range(n_src)]
+    vecs = list(vec)
+    for _ in range(n - n_src):
+        src = int(rng.integers(n_src))
+        t = toks[src].copy()
+        k = max(1, len(t) // 20)
+        t[rng.choice(len(t), size=k, replace=False)] = \
+            rng.choice(vocab, size=k, p=p)
+        toks.append(t)
+        vecs.append(vec[src] + rng.standard_normal(dim) * 0.02)
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{x}" for x in t)) for i, t in enumerate(toks)],
+        "doc_id long, text string")
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>")
+    return docs, emb, n - n_src
+
+
+def test_two_stage_lsh_confirms_exactly_the_exact_pairs(spark):
+    from logsqlite_spark.operators.dedup import two_stage_dedup
+
+    docs, emb, n_copies = _near_dup_corpus(spark, 800, seed=11)
+
+    def confirmed(method):
+        return {(r.a_id, r.b_id) for r in
+                two_stage_dedup(docs, emb, method=method).collect()}
+
+    exact = confirmed("exact")
+    assert len(exact) >= n_copies  # every copy confirms with its source
+    assert confirmed("lsh") == exact
+
+
+def test_lsh_candidates_grow_linearly_not_all_pairs(spark):
+    from logsqlite_spark.operators.similarity import embedding_dedup_pairs
+
+    n = 2000
+    _, emb, _ = _near_dup_corpus(spark, n, seed=12)
+    # threshold -1 keeps every candidate the banding emits
+    cand = embedding_dedup_pairs(emb, threshold=-1.0, method="lsh").count()
+    assert cand < 0.01 * n * (n - 1) / 2
+
 
 def test_lsh_topk_high_recall_on_tiny_set(spark, emb):
     q = emb.filter(F.col("vec_id") == 0)

@@ -758,7 +758,7 @@ def _commit_contention_worker(args):
 
     _T.RECORD_LOCK_WAITS = True
     random.seed(i)
-    t = _T.open_table(root)
+    t = _T.ManifestTable(root)
     lat = []
     for k in range(k_commits):
         if pace_s:
@@ -771,24 +771,21 @@ def _commit_contention_worker(args):
 
 
 def _commit_contention() -> dict:
-    """VERDICT r13 #4 / r15 #1: manifest commit latency vs concurrent
-    committer count against one warehouse, single-flock vs sharded.
+    """Manifest commit latency vs concurrent committer count against
+    one warehouse's single commit flock.
 
-    r16 methodology change: committers are PROCESSES, not threads —
-    the r15 threaded harness measured flock queueing faithfully
-    (waiters sleep and release the GIL) but could never show sharded
-    scaling, because N threads doing real commit work serialize on
-    the GIL regardless of lock layout; real multi-writer topology is
-    multi-process anyway (the duo soak, one engine per daemon).
+    Committers are PROCESSES, not threads: N threads doing real commit
+    work serialize on the GIL whatever the lock does, and real
+    multi-writer topology is multi-process anyway (the duo soak, one
+    engine per daemon).
 
     Rows: stress (back-to-back commits — saturates the fs journal on
     purpose) and paced (50 ms jittered duty cycle per writer, the
     realistic cadence).  Each row also reports the p95 time spent
-    WAITING ON THE FLOCK (table.LOCK_WAIT_LOG): for the sharded rows
-    it is ~0, proving the residual latency is fs-metadata/CPU
-    saturation of this machine, not lock contention.  Invariants
-    (no lost increment, no lost file, batch watermarks complete) are
-    asserted per row."""
+    WAITING ON THE FLOCK (table.LOCK_WAIT_LOG), which separates lock
+    queueing from fs-metadata/CPU saturation of the machine in the
+    commit latency.  Invariants (no lost increment, no lost file,
+    batch watermarks complete) are asserted per row."""
     import multiprocessing as mp
     import shutil
     import tempfile
@@ -798,11 +795,9 @@ def _commit_contention() -> dict:
     K = 15
     out: dict = {}
 
-    def run(n: int, shards: int, pace_s: float, key: str) -> None:
+    def run(n: int, pace_s: float, key: str) -> None:
         root = tempfile.mkdtemp(prefix="bench-commit-")
-        if shards > 1:
-            T.init_sharded_table(root, shards)
-        t = T.open_table(root)
+        t = T.ManifestTable(root)
         t.commit_append([], "boot", None, {}, {})
         with mp.get_context("fork").Pool(n) as pool:
             res = pool.map(_commit_contention_worker,
@@ -827,20 +822,14 @@ def _commit_contention() -> dict:
         shutil.rmtree(root, ignore_errors=True)
 
     # stress rows: back-to-back commits
-    run(1, 1, 0.0, "c1")
-    run(16, 1, 0.0, "c16")
-    run(16, 64, 0.0, "c16_sharded64")
-    run(64, 1, 0.0, "c64")
-    run(64, 256, 0.0, "c64_sharded256")
+    run(1, 0.0, "c1")
+    run(16, 0.0, "c16")
+    run(64, 0.0, "c64")
     # paced rows: 50 ms jittered duty cycle (realistic writer cadence)
-    run(1, 1, 0.05, "c1_paced")
-    run(64, 1, 0.05, "c64_paced")
-    run(64, 256, 0.05, "c64_sharded256_paced")
+    run(1, 0.05, "c1_paced")
+    run(64, 0.05, "c64_paced")
     out["fair_ratio"] = round(
         out["c16"]["p50_ms"] / max(out["c1"]["p50_ms"], 1e-9), 2)
-    out["fair_ratio_sharded_c64"] = round(
-        out["c64_sharded256_paced"]["p50_ms"]
-        / max(out["c1_paced"]["p50_ms"], 1e-9), 2)
     out["model"] = "process"
     return out
 

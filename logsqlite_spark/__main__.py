@@ -149,18 +149,12 @@ def main(argv: list[str] | None = None) -> int:
     if a.cmd == "erase":
         res = eng.erase(a.predicate, container_id=a.container)
         if a.gc:
-            from logsqlite_spark.table import open_table
-
-            res["gc"] = open_table(eng.config.logs_dir).gc(
-                keep_generations=1)
+            res["gc"] = eng.table.gc(keep_generations=1)
         print(res)
         return 0
 
     if a.cmd == "gc":
-        from logsqlite_spark.table import open_table
-
-        print(open_table(eng.config.logs_dir).gc(
-            keep_generations=a.keep))
+        print(eng.table.gc(keep_generations=a.keep))
         return 0
 
     return 2

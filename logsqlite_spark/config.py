@@ -137,15 +137,6 @@ class EngineConfig:
 
     warehouse_dir: str = "/tmp/logsqlite_spark"
     cleanup_interval_s: int = 30 * 60
-    # Manifest shard count (r16, VERDICT r15 #1): >1 hash-shards the
-    # logs table's manifest state by container so concurrent
-    # committers stop serializing on one flock (per-container
-    # isolation, mirroring the reference's one-logger-per-FIFO).
-    # Applies at warehouse creation; an existing warehouse keeps the
-    # layout it was initialized with.  Trade-off: sharded mode has
-    # per-shard (≥ per-container) snapshot consistency and per-shard
-    # time travel instead of one global generation counter.
-    manifest_shards: int = 1
 
     @property
     def logs_dir(self) -> str:

@@ -28,7 +28,7 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from logsqlite_spark.table import (CommitConflict, ManifestTable, open_table,
+from logsqlite_spark.table import (CommitConflict, ManifestTable,
                                    escape_partition_value,
                                    unescape_partition_value)
 
@@ -41,7 +41,7 @@ def compact_container(
     target_records: int = 4_000_000,
 ) -> dict:
     """Compact every date partition of one container that needs it."""
-    table = open_table(logs_dir)
+    table = ManifestTable(logs_dir)
     manifest = table.import_existing()
     prefix = f"container_id={escape_partition_value(container_id)}/"
     by_date: dict[str, list[str]] = {}
@@ -91,7 +91,7 @@ def compact_container(
 
 
 def compact_all(spark: SparkSession, logs_dir: str, **kw) -> dict:
-    table = open_table(logs_dir)
+    table = ManifestTable(logs_dir)
     manifest = table.import_existing()
     containers = sorted({
         unescape_partition_value(f.split("/", 1)[0].split("=", 1)[1])

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from logsqlite_spark.config import LogConfig
-from logsqlite_spark.table import (CommitConflict, ManifestTable, open_table,
+from logsqlite_spark.table import (CommitConflict, ManifestTable,
                                    escape_partition_value,
                                    unescape_partition_value)
 
@@ -107,7 +107,7 @@ def apply_retention(
     if conf.cleanup_age_s is None and conf.cleanup_max_lines is None:
         return empty
 
-    table = open_table(logs_dir)
+    table = ManifestTable(logs_dir)
     manifest = table.import_existing()
     prefix = f"container_id={escape_partition_value(container_id)}/"
     by_date: dict[str, list[str]] = {}
@@ -238,7 +238,7 @@ def drop_container(logs_dir: str, container_id: str) -> bool:
     root = (Path(logs_dir)
             / f"container_id={escape_partition_value(container_id)}")
     had_dir = root.exists()
-    table = open_table(logs_dir)
+    table = ManifestTable(logs_dir)
     dropped = 0
     if table.exists() or Path(logs_dir).exists():
         table.import_existing()
@@ -274,7 +274,7 @@ def erase_matching(
     the partitions that actually contain the subject's rows.
     """
 
-    table = open_table(logs_dir)
+    table = ManifestTable(logs_dir)
     manifest = table.import_existing()
     by_part: dict[tuple[str, str], list[str]] = {}
     for f in manifest["files"]:

@@ -46,7 +46,7 @@ from pyspark.sql.window import Window
 
 from logsqlite_spark.config import LogConfig
 from logsqlite_spark.sources.spool import read_spool_batch, read_spool_stream
-from logsqlite_spark.table import open_table, unescape_partition_value
+from logsqlite_spark.table import ManifestTable, unescape_partition_value
 
 DECODE_ERROR_SOURCE = "__decode_error__"
 
@@ -191,7 +191,7 @@ def _write_batch(batch_df: DataFrame, logs_dir: str, state_dir: str,
     watermark moves, and the next pull (or the replayed micro-batch)
     retries the same files.
     """
-    table = open_table(logs_dir)
+    table = ManifestTable(logs_dir)
     st = table.import_existing()  # no-op once the manifest exists
     if batch_id is not None and batch_id <= st["batch_ids"].get(scope, -1):
         return {"skipped_replay": True, "batch_id": batch_id}

@@ -162,19 +162,21 @@ class CommitConflict(RuntimeError):
 
 
 class ManifestTable:
-    def __init__(self, table_dir: str, meta_dir: str | None = None):
-        """``meta_dir`` (r16, VERDICT r15 #1): where the manifest
-        protocol state lives (_manifests/_current/_commit.lock).
-        Defaults to the table dir itself — the historical layout.  A
-        :class:`ShardedManifestTable` gives each shard its own meta
-        dir under ``<table>/_shards/`` while all shards share the one
-        data tree, so commits to different shards take different
-        flocks."""
+    def __init__(self, table_dir: str):
+        """Refuses a table written by the retired sharded manifest,
+        whose marker file sits in the table root: its committed state
+        lives under ``_shards/``, so opening it here would publish a
+        fresh root head and every later :meth:`gc` would delete the
+        files the shards had committed."""
         self.dir = Path(table_dir)
-        self.meta = Path(meta_dir) if meta_dir is not None else self.dir
-        self.manifests = self.meta / "_manifests"
-        self.current_ptr = self.meta / "_current"
-        self.lock_path = self.meta / "_commit.lock"
+        if (self.dir / "_shards.json").exists():
+            raise ValueError(
+                f"{table_dir} is a sharded-manifest table, which this "
+                "version no longer reads; re-ingest it into a new "
+                "warehouse")
+        self.manifests = self.dir / "_manifests"
+        self.current_ptr = self.dir / "_current"
+        self.lock_path = self.dir / "_commit.lock"
         self.staging_root = self.dir / "_staging"
 
     # -- snapshot access ------------------------------------------------------
@@ -751,34 +753,15 @@ class ManifestTable:
         spares anything newer than 60 s; pass ``grace_s=0`` only when
         no commit can be in flight (tests, offline maintenance).
         Run on the cleaner cadence.
-        """
-        meta = self.gc_meta(keep_generations, grace_s)
-        if meta.get("aborted_stale_head"):
-            return {"deleted_files": 0,
-                    "deleted_manifests": meta["deleted_manifests"],
-                    "aborted_stale_head": True}
-        if not meta["ran"]:
-            return {"deleted_files": 0, "deleted_manifests": 0}
-        deleted = _gc_data_walk(self.dir, meta["referenced"], grace_s)
-        return {"deleted_files": deleted,
-                "deleted_manifests": meta["deleted_manifests"]}
 
-    def gc_meta(self, keep_generations: int = 2,
-                grace_s: float = 60.0) -> dict:
-        """The manifest/chunk phase of :meth:`gc`: age out old
-        manifest generations and unreferenced chunk files, and return
-        the set of data files the kept generations reference — WITHOUT
-        touching the data tree.  Split out (r16) so
-        :class:`ShardedManifestTable` can run it per shard, union the
-        referenced sets, and make ONE pass over the shared data tree.
-        Returns ``{"ran", "referenced", "deleted_manifests",
-        "aborted_stale_head"}``; when ``aborted_stale_head`` is set
-        the referenced set may be incomplete and NO data owned by this
-        manifest may be deleted."""
+        Two phases: age out old manifest generations and unreferenced
+        chunk files while collecting the data files the kept
+        generations reference, then walk the data tree.  When the
+        pinned head vanished mid-pass the result carries
+        ``aborted_stale_head`` and no data file is deleted.
+        """
         if not self.current_ptr.exists():
-            return {"ran": False, "referenced": set(),
-                    "deleted_manifests": 0,
-                    "aborted_stale_head": False}
+            return {"deleted_files": 0, "deleted_manifests": 0}
         gen = int(self.current_ptr.read_text().strip())
         keep_from = max(1, gen - keep_generations + 1)
         referenced: set[str] = set()
@@ -820,7 +803,7 @@ class ManifestTable:
             # loudly regardless).  The referenced set may miss
             # carried-forward files, so deleting ANYTHING is unsafe —
             # abort; the next cadence pass re-pins a fresh head.
-            return {"ran": True, "referenced": set(),
+            return {"deleted_files": 0,
                     "deleted_manifests": deleted_manifests,
                     "aborted_stale_head": True}
         # chunk files no kept head references (immutable, so any
@@ -840,10 +823,9 @@ class ManifestTable:
                     cf.unlink()
                 except FileNotFoundError:
                     continue  # peer collected it mid-pass
-        return {"ran": True, "referenced": referenced,
-                "deleted_manifests": deleted_manifests,
-                "aborted_stale_head": False}
-
+        deleted = _gc_data_walk(self.dir, referenced, grace_s)
+        return {"deleted_files": deleted,
+                "deleted_manifests": deleted_manifests}
 
     def drop_container(self, container_id: str) -> int:
         """delete_when_stopped parity (statehandler.rs:176-181): drop
@@ -923,28 +905,24 @@ def _cid_of_rel(rel: str) -> str:
     return ""
 
 
-def _gc_data_walk(root: Path, referenced: set[str], grace_s: float,
-                  skip_rel=None) -> int:
+def _gc_data_walk(root: Path, referenced: set[str], grace_s: float) -> int:
     """The data phase of gc: delete unreferenced parquet under
     ``root``, prune empty partition dirs, expire stale staging.
-    ``skip_rel(rel_path) -> bool`` (r16) spares files a sharded gc
-    may not judge (their owning shard's meta pass aborted).  Returns
-    the deleted-file count."""
+    Returns the deleted-file count."""
     now = time.time()
     deleted = 0
     # os.walk, not Path.rglob: rglob RAISES when a directory it
     # listed vanishes before it descends (a peer's commit adoption
     # removes _staging/<uuid> dirs constantly — the duo soak died
     # there in 27 cycles); os.walk ignores scandir errors by
-    # design.  _staging/_manifests/_shards are pruned from the walk
-    # entirely instead of per-file filtering.
+    # design.  _staging/_manifests are pruned from the walk entirely
+    # instead of per-file filtering.
     data_dirs: list[Path] = []
     for dirpath, dirnames, filenames in os.walk(root):
         _gc_hook("walk_dir", dirpath)
         if Path(dirpath) == root:
             dirnames[:] = [d for d in dirnames
-                           if d not in ("_staging", "_manifests",
-                                        "_shards")]
+                           if d not in ("_staging", "_manifests")]
         else:
             data_dirs.append(Path(dirpath))
         for fn in filenames:
@@ -953,8 +931,6 @@ def _gc_data_walk(root: Path, referenced: set[str], grace_s: float,
             f = Path(dirpath) / fn
             rel = str(f.relative_to(root))
             if rel in referenced:
-                continue
-            if skip_rel is not None and skip_rel(rel):
                 continue
             try:
                 if now - f.stat().st_mtime < grace_s:
@@ -980,425 +956,3 @@ def _gc_data_walk(root: Path, referenced: set[str], grace_s: float,
             if expired:
                 shutil.rmtree(d, ignore_errors=True)
     return deleted
-
-
-# ---------------------------------------------------------------------------
-# Sharded manifests (r16, VERDICT r15 #1)
-# ---------------------------------------------------------------------------
-#
-# BENCH_SELF's commit_contention trendline showed the single warehouse
-# flock going from p95 0.95 ms at one committer to 93 ms (max 385 ms)
-# at just 16 — the one measured scale cliff in the engine.  The
-# reference's unit of isolation is the CONTAINER (one logger per FIFO,
-# one SQLite tx stream per log, logger.rs:250-251); this mirrors it:
-# the manifest state is hash-sharded BY CONTAINER into N independent
-# ManifestTables that share one data tree.  Commits to different
-# shards take different flocks and publish different heads, so
-# concurrent per-container writers stop queuing on each other
-# entirely; cross-container operations (mux batch commits, retention,
-# gc) decompose into per-shard commits — each shard keeps the full
-# single-manifest crash contract, and the cross-shard protocol adds
-# exactly one rule (below).
-#
-# Layout (marker selects the protocol; absent = classic single
-# manifest, so every pre-r16 warehouse keeps working untouched)::
-#
-#     table/
-#       _shards.json                  # {"n": N} — written once at init
-#       _shards/s000/_manifests/...   # shard 0's manifest state
-#       _shards/s000/_current
-#       _shards/s000/_commit.lock
-#       ...
-#       _staging/<uuid>/...           # shared writer scratch
-#       container_id=<c>/date=<d>/*.parquet   # shared data tree
-#
-# Semantics vs the single manifest:
-#
-# - Container state (high_water, last_file, data files) lives in
-#   exactly ONE shard (crc32(container) % N), so per-container
-#   invariants (seq contiguity, spool watermark monotonicity, reader
-#   snapshot consistency per container) are untouched — they were
-#   always per-container facts.
-# - Batch exactly-once becomes a two-level rule: every data shard a
-#   batch touches dedupes on ITS OWN batch_ids[scope], and the
-#   scope's AUTHORITATIVE shard (crc32(scope) % N) is committed LAST.
-#   The merged head reports batch_ids[scope] from the authoritative
-#   shard only, so a caller's replay pre-check says "committed" iff
-#   every shard of that batch committed.  A crash mid-fanout replays
-#   the batch; already-committed shards dedupe (their files stay
-#   referenced, their seq increments don't re-apply), the rest commit
-#   — per-container exactly-once, like the reference's per-container
-#   SQLite transactions.
-# - Readers materialize the union of shard snapshots: snapshot
-#   consistency is per shard (≥ per container), not global — the
-#   reference never had a cross-container snapshot either.
-# - Global time travel (manifest_at/generations over one generation
-#   counter) does not exist in sharded mode; per-shard time travel
-#   remains via .shards[k].
-#
-# 100 TB note: N is a small constant (16-64).  Contention falls by
-# ~N for uniformly-hashed writers; a single hot container still
-# serializes on its shard — which is the reference's semantics (one
-# writer per container) and the correct floor.
-
-_SHARD_MARKER = "_shards.json"
-
-
-def _shard_of(key: str, n: int) -> int:
-    """Stable shard routing (crc32 — stable across processes/runs,
-    unlike hash())."""
-    import zlib
-
-    return zlib.crc32(key.encode("utf-8")) % n
-
-
-def table_shard_count(table_dir: str) -> int:
-    """The shard count a warehouse was initialized with (1 = classic
-    single manifest; the marker is absent for every pre-r16 table)."""
-    try:
-        return int(json.loads(
-            (Path(table_dir) / _SHARD_MARKER).read_text())["n"])
-    except (FileNotFoundError, KeyError, ValueError):
-        return 1
-
-
-def init_sharded_table(table_dir: str, n_shards: int) -> None:
-    """Stamp a warehouse as N-sharded (idempotent; refuses to change
-    an existing stamp or to shard a table that already has classic
-    single-manifest state — resharding would strand committed
-    manifests)."""
-    if n_shards <= 1:
-        return
-    root = Path(table_dir)
-    cur = table_shard_count(table_dir)
-    if (root / _SHARD_MARKER).exists():
-        if cur != n_shards:
-            raise ValueError(
-                f"table {table_dir} already sharded n={cur}; "
-                f"cannot re-shard to {n_shards}")
-        return
-    if (root / "_current").exists():
-        raise ValueError(
-            f"table {table_dir} already has single-manifest state; "
-            "resharding an existing table is not supported")
-    root.mkdir(parents=True, exist_ok=True)
-    tmp = root / (_SHARD_MARKER + ".tmp")
-    tmp.write_text(json.dumps({"n": int(n_shards)}))
-    os.rename(tmp, root / _SHARD_MARKER)
-
-
-def open_table(table_dir: str):
-    """THE constructor call sites use: returns the classic
-    ManifestTable or the sharded wrapper, as the warehouse's marker
-    says.  Every component (ingest, retention, compaction, erase, gc,
-    follow) works against either through the same surface."""
-    n = table_shard_count(table_dir)
-    if n <= 1:
-        return ManifestTable(table_dir)
-    return ShardedManifestTable(table_dir, n)
-
-
-class ShardedManifestTable:
-    """N independent per-container-hash manifest shards over one data
-    tree — see the module-section comment above for the protocol."""
-
-    def __init__(self, table_dir: str, n_shards: int):
-        self.dir = Path(table_dir)
-        self.n = int(n_shards)
-        self.shards = [
-            ManifestTable(table_dir,
-                          meta_dir=self.dir / "_shards" / f"s{k:03d}")
-            for k in range(self.n)
-        ]
-        self.staging_root = self.shards[0].staging_root
-
-    # -- routing --------------------------------------------------------------
-
-    def shard_for_container(self, container_id: str) -> int:
-        return _shard_of(container_id, self.n)
-
-    def _shard_of_rel(self, rel: str) -> int:
-        return _shard_of(_cid_of_rel(rel), self.n)
-
-    # -- scope watermarks (batch exactly-once) --------------------------------
-    #
-    # The cross-shard batch rule: data shards each dedupe on their OWN
-    # batch_ids[scope]; the scope's COMPLETION watermark is a tiny
-    # per-scope file written by atomic rename AFTER every data shard
-    # committed.  The replay pre-check reads the scope file, so it
-    # says "committed" iff the whole fan-out finished — a crash
-    # mid-fanout replays the batch and the done shards dedupe.  No
-    # flock: a scope is one writer by construction (one StreamingQuery
-    # per query-name scope; pulls use batch_id=None).  One file per
-    # scope, bounded by the number of streams ever run.
-
-    def _scopes_dir(self) -> Path:
-        return self.dir / "_shards" / "_scopes"
-
-    def _scope_file(self, scope: str) -> Path:
-        import hashlib
-
-        h = hashlib.sha1(scope.encode("utf-8")).hexdigest()
-        # two-level layout: renames into one shared dir serialize on
-        # that directory's inode mutex in the kernel — spread scopes
-        # over 256 subdirs so concurrent writers rarely share one
-        return self._scopes_dir() / h[:2] / (h + ".json")
-
-    def _scope_batch(self, scope: str) -> int:
-        try:
-            d = json.loads(self._scope_file(scope).read_text())
-            return int(d["batch_id"])
-        except (FileNotFoundError, KeyError, ValueError):
-            return -1
-
-    def _write_scope_batch(self, scope: str, batch_id: int) -> None:
-        target = self._scope_file(scope)
-        target.parent.mkdir(parents=True, exist_ok=True)
-        tmp = target.with_suffix(f".tmp{os.getpid()}")
-        tmp.write_text(json.dumps({"scope": scope,
-                                   "batch_id": int(batch_id)}))
-        os.rename(tmp, target)
-
-    def _all_scope_batches(self) -> dict[str, int]:
-        d = self._scopes_dir()
-        if not d.exists():
-            return {}
-        out: dict[str, int] = {}
-        for f in d.glob("*/*.json"):
-            try:
-                rec = json.loads(f.read_text())
-                out[rec["scope"]] = int(rec["batch_id"])
-            except (OSError, KeyError, ValueError, json.JSONDecodeError):
-                continue
-        return out
-
-    def _group_by_shard(self, new_files, seq_increments, last_files):
-        groups: dict[int, dict] = {}
-
-        def g(k: int) -> dict:
-            return groups.setdefault(
-                k, {"files": [], "incs": {}, "lf": {}})
-
-        for f in new_files or []:
-            g(self._shard_of_rel(f))["files"].append(f)
-        for cid, inc in (seq_increments or {}).items():
-            g(self.shard_for_container(cid))["incs"][cid] = inc
-        for cid, lf in (last_files or {}).items():
-            g(self.shard_for_container(cid))["lf"][cid] = lf
-        return groups
-
-    # -- snapshot access ------------------------------------------------------
-
-    def exists(self) -> bool:
-        return any(s.exists() for s in self.shards)
-
-    def _merged(self, materialize: bool) -> dict:
-        files: list[str] = []
-        hw: dict = {}
-        lf: dict = {}
-        bid: dict = {}
-        gen = 0
-        n_files = 0
-        for sh in self.shards:
-            h = sh.manifest() if materialize else sh.head()
-            gen += h.get("generation", 0)
-            hw.update(h.get("high_water", {}))
-            lf.update(h.get("last_file", {}))
-            if materialize:
-                files.extend(h.get("files", []))
-            n_files += h.get("n_files", len(h.get("files", [])))
-        # batch completion watermarks come from the scope files, NOT
-        # the per-shard batch_ids (those prove only per-shard commits)
-        bid = self._all_scope_batches()
-        out = {"generation": gen, "batch_ids": bid, "high_water": hw,
-               "last_file": lf, "n_files": n_files}
-        if materialize:
-            out["files"] = files
-        return out
-
-    def manifest(self) -> dict:
-        return self._merged(materialize=True)
-
-    def head(self) -> dict:
-        return self._merged(materialize=False)
-
-    def import_existing(self) -> dict:
-        if self.exists():
-            return self.manifest()
-        if not self.dir.exists():
-            return self.manifest()
-        found = sorted(
-            str(f.relative_to(self.dir))
-            for f in self.dir.rglob("*.parquet")
-            if f.relative_to(self.dir).parts[0] not in ("_staging",
-                                                        "_manifests",
-                                                        "_shards"))
-        by_shard: dict[int, list[str]] = {}
-        for f in found:
-            by_shard.setdefault(self._shard_of_rel(f), []).append(f)
-        for k, lst in sorted(by_shard.items()):
-            self.shards[k].commit_append(lst, "__import__", None, {}, {})
-        return self.manifest()
-
-    def generations(self):
-        raise NotImplementedError(
-            "sharded tables have per-shard generations; use "
-            ".shards[k].generations()")
-
-    def manifest_at(self, generation: int):
-        raise NotImplementedError(
-            "sharded tables have per-shard time travel; use "
-            ".shards[k].manifest_at(gen)")
-
-    def data_files(self, manifest: dict | None = None) -> list[str]:
-        m = manifest or self.manifest()
-        return [str(self.dir / f) for f in m["files"]]
-
-    def read_df(self, spark: SparkSession,
-                manifest: dict | None = None) -> DataFrame:
-        # same shared data tree / basePath as the single manifest
-        return self.shards[0].read_df(
-            spark, manifest or self.manifest())
-
-    # -- writer surface -------------------------------------------------------
-
-    def new_staging_dir(self) -> Path:
-        return self.shards[0].new_staging_dir()
-
-    def adopt_staged(self, staging_dir: Path) -> list[str]:
-        return self.shards[0].adopt_staged(staging_dir)
-
-    def commit_append(self, new_files: list[str], scope: str,
-                      batch_id: int | None,
-                      seq_increments: dict[str, int],
-                      last_files: dict[str, str],
-                      staging: Path | None = None) -> dict | None:
-        """Per-shard fan-out append; authoritative shard LAST (the
-        exactly-once rule in the module-section comment).  Each shard
-        moves its own group out of ``staging`` under its own lock —
-        the lock its containers' drops take."""
-        groups = self._group_by_shard(new_files, seq_increments,
-                                      last_files)
-        if batch_id is not None and batch_id <= self._scope_batch(scope):
-            return None  # fully-committed batch (scope watermark)
-        committed_any = False
-        hw: dict = {}
-        lf: dict = {}
-        appended: list[str] = []
-        for k in sorted(groups):
-            grp = groups[k]
-            res = self.shards[k].commit_append(
-                grp["files"], scope, batch_id, grp["incs"], grp["lf"],
-                staging=staging)
-            if res is not None:
-                committed_any = True
-                hw.update(res.get("high_water", {}))
-                lf.update(res.get("last_file", {}))
-                appended += res["appended"]
-        if batch_id is not None:
-            # completion watermark LAST — the whole fan-out is now
-            # durable, so the replay pre-check may say "committed"
-            self._write_scope_batch(scope, batch_id)
-            if not committed_any and groups:
-                # crash-window replay: every data shard had already
-                # committed this batch and only the watermark was
-                # missing — finishing it is not a new commit, and the
-                # caller must NOT re-publish the batch's rows
-                return None
-            committed_any = True
-        # the returned view covers the shards this batch TOUCHED — a
-        # superset of the batch's containers, which is what callers
-        # consume (follow seams, ingest results); merging all N shards
-        # here would put O(N) head reads on every commit's critical
-        # path for state no caller reads
-        out = {"high_water": hw, "last_file": lf, "appended": appended,
-               "batch_ids": ({scope: batch_id}
-                             if batch_id is not None else {})}
-        return out
-
-    def update_state(self, **updates) -> dict:
-        """Container-keyed state updates route to owning shards; any
-        non-container key (batch_ids) routes per scope."""
-        by_shard: dict[int, dict] = {}
-        for key, val in updates.items():
-            for sub, v in val.items():
-                if key == "batch_ids":
-                    self._write_scope_batch(sub, v)
-                    continue
-                k = self.shard_for_container(sub)
-                by_shard.setdefault(k, {}).setdefault(key, {})[sub] = v
-        out: dict = {}
-        for k, upd in sorted(by_shard.items()):
-            res = self.shards[k].update_state(**upd)
-            for key in updates:
-                out.setdefault(key, {}).update(res.get(key, {}))
-        return out
-
-    def commit_replace(self, remove_files: list[str],
-                       new_files: list[str]) -> dict:
-        """Per-shard replace.  Each shard keeps the all-or-nothing
-        conflict contract; across shards the op is per-container
-        atomic: every shard is ATTEMPTED (no starvation of
-        independent containers behind one conflicted shard), then a
-        single CommitConflict reports any that declined — the caller
-        recomputes from a fresh snapshot on its next cadence, exactly
-        as with the single manifest."""
-        rm_by: dict[int, list[str]] = {}
-        for f in remove_files:
-            rm_by.setdefault(self._shard_of_rel(f), []).append(f)
-        new_by: dict[int, list[str]] = {}
-        for f in new_files:
-            new_by.setdefault(self._shard_of_rel(f), []).append(f)
-        conflicts: list[str] = []
-        for k in sorted(set(rm_by) | set(new_by)):
-            try:
-                self.shards[k].commit_replace(rm_by.get(k, []),
-                                              new_by.get(k, []))
-            except CommitConflict as e:
-                conflicts.append(f"shard {k}: {e}")
-        if conflicts:
-            raise CommitConflict(
-                f"{len(conflicts)} shard(s) declined: "
-                + "; ".join(conflicts))
-        # callers ignore the return (maintenance ops re-read the
-        # manifest on their next pass); keep it cheap
-        return {"replaced_shards": sorted(set(rm_by) | set(new_by))}
-
-    def drop_container(self, container_id: str) -> int:
-        return self.shards[self.shard_for_container(container_id)] \
-            .drop_container(container_id)
-
-    def readmit_container(self, container_id: str) -> None:
-        self.shards[self.shard_for_container(container_id)] \
-            .readmit_container(container_id)
-
-    # -- maintenance ----------------------------------------------------------
-
-    def gc(self, keep_generations: int = 2, grace_s: float = 60.0) -> dict:
-        """Per-shard meta aging + ONE pass over the shared data tree.
-        A shard whose meta pass aborted (stale pinned head — see
-        ManifestTable.gc_meta) contributes nothing to the referenced
-        set AND its containers' files are spared entirely."""
-        referenced: set[str] = set()
-        aborted: set[int] = set()
-        deleted_manifests = 0
-        ran = False
-        for k, sh in enumerate(self.shards):
-            meta = sh.gc_meta(keep_generations, grace_s)
-            deleted_manifests += meta["deleted_manifests"]
-            if meta.get("aborted_stale_head"):
-                aborted.add(k)
-            if meta["ran"]:
-                ran = True
-            referenced |= meta["referenced"]
-        if not ran:
-            return {"deleted_files": 0, "deleted_manifests": 0}
-        deleted = _gc_data_walk(
-            self.dir, referenced, grace_s,
-            skip_rel=(None if not aborted
-                      else lambda rel: self._shard_of_rel(rel) in aborted))
-        out = {"deleted_files": deleted,
-               "deleted_manifests": deleted_manifests}
-        if aborted:
-            out["aborted_stale_head"] = True
-        return out

@@ -113,17 +113,14 @@ def test_stop_logging_drops_container_under_multiplexed_stream(engine):
     assert q.isActive
 
 
-@pytest.mark.parametrize("shards", [1, 4])
-def test_stop_logging_between_read_and_commit(spark, tmp_path, monkeypatch,
-                                              shards):
+def test_stop_logging_between_read_and_commit(spark, tmp_path, monkeypatch):
     """A drop that lands after a batch was read and staged but before
     it commits: the batch commits only the other containers' rows,
     the dropped container's staged files never enter the data tree,
     and the table stays readable."""
     from logsqlite_spark.streaming import ingest as ING
 
-    eng = Engine(spark, EngineConfig(warehouse_dir=str(tmp_path / "wh"),
-                                     manifest_shards=shards))
+    eng = Engine(spark, EngineConfig(warehouse_dir=str(tmp_path / "wh")))
     spool = eng.config.spool_dir
     eng.start_logging("cr")  # default: delete on stop
     eng.start_logging("ck", None, {"delete_when_stopped": "false"})

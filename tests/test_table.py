@@ -535,6 +535,59 @@ def test_concurrent_committers_no_lost_updates(tmp_path):
         assert m["last_file"][f"a{i}"] == f"spool/{i}/{N_COMMITS - 1:06d}"
 
 
+def _process_committer(args):
+    root, i, k_commits = args
+    t = ManifestTable(root)
+    rels = [f"container_id=w{i}/date=2024-01-01/f{k}.parquet"
+            for k in range(k_commits)]
+    for k, rel in enumerate(rels):
+        assert t.commit_append([rel], f"sc{i}", k, {f"w{i}": 1}, {}) \
+            is not None
+    # a replay of the last batch (crash between commit and ack) must
+    # dedupe inside the commit, also when it races the other processes
+    return t.commit_append([rels[-1]], f"sc{i}", k_commits - 1,
+                           {f"w{i}": 1}, {})
+
+
+def test_concurrent_process_committers_lose_nothing(tmp_path):
+    """Committer PROCESSES serialize on the cross-process flock: every
+    batch commits exactly once, and no file, seq increment or batch id
+    is lost (the thread tests above share one process's GIL)."""
+    import multiprocessing as mp
+
+    root = str(tmp_path / "t")
+    n, k = 8, 6
+    with mp.get_context("fork").Pool(n) as pool:
+        replays = pool.map(_process_committer,
+                           [(root, i, k) for i in range(n)])
+    assert replays == [None] * n
+    m = ManifestTable(root).manifest()
+    assert m["generation"] == n * k
+    assert sorted(m["files"]) == sorted(
+        f"container_id=w{i}/date=2024-01-01/f{j}.parquet"
+        for i in range(n) for j in range(k))
+    assert m["high_water"] == {f"w{i}": k for i in range(n)}
+    assert m["batch_ids"] == {f"sc{i}": k - 1 for i in range(n)}
+
+
+def test_sharded_manifest_warehouse_is_refused(spark, tmp_path):
+    """A warehouse stamped by the retired sharded manifest keeps its
+    committed state under ``_shards/``; opening it as a single-manifest
+    table would publish a root head that makes gc delete those files."""
+    from logsqlite_spark.api import Engine
+    from logsqlite_spark.config import EngineConfig
+
+    wh = tmp_path / "wh"
+    logs = wh / "logs"
+    logs.mkdir(parents=True)
+    (logs / "_shards.json").write_text(json.dumps({"n": 8}))
+    with pytest.raises(ValueError, match="sharded"):
+        ManifestTable(str(logs))
+    with pytest.raises(ValueError, match="sharded"):
+        Engine(spark, EngineConfig(warehouse_dir=str(wh)))
+    assert sorted(p.name for p in logs.iterdir()) == ["_shards.json"]
+
+
 def test_commit_replace_conflicts_when_input_concurrently_rewritten(tmp_path):
     """Round-14 soak finding (duplicate seqs within 8 kill cycles):
     compaction merged files A,B into M from its snapshot while

@@ -44,7 +44,10 @@ what was handed to the engine):
 A final COVERAGE gate fails runs (>=10 cycles) that never drove
 followers, the sink, corrupt files, retention, or erase — a green run
 that exercised nothing proves nothing (and it caught a real
-maintenance-starvation bug an invariant never would have).
+maintenance-starvation bug an invariant never would have).  Every
+profile ledgers each maintenance op's start and outcome
+(``ledger_maint.jsonl``) and reports them per op, so a zero count
+reads as starvation or as a failing op.
 
 Usage:
     python tools/soak.py --cycles 20 [--seed 7] [--root DIR] [--keep]
@@ -109,6 +112,38 @@ ERASE_CIDS = {"c4", "c5"}
 
 def containers_for(profile: str) -> dict:
     return CONTAINERS_DUO if profile == "duo" else CONTAINERS
+
+
+# every LONG_WINDOW_EVERY-th cycle the victim is killed LONG_WINDOW_S
+# after it is ready instead of 2.5-9 s
+LONG_WINDOW_EVERY = 4
+LONG_WINDOW_S = (15.0, 25.0)
+
+
+def long_window(cycle: int) -> bool:
+    return cycle % LONG_WINDOW_EVERY == LONG_WINDOW_EVERY - 1
+
+
+def first_pass_order(cycle: int) -> list[str]:
+    """The maintenance actor's op order for its first pass in a cycle.
+
+    On a victim that has just started, one op fills most of a short
+    kill window.  Measured on 4 vCPU: in the pull profile cleanup
+    (retention over every registered container, then gc) took
+    14-17 s, its retention commit for the retention container about
+    9 s, compaction about 6 s and erase about 7.5 s; in the stream
+    profile erase took 10 s, compaction 13 s and cleanup 11.5 s.  An
+    op that does not lead the first pass hardly ever runs before the
+    kill: when cleanup led every cycle, compaction and erase never
+    started in a 10-cycle run.  So the long windows lead with erase
+    and then cleanup, whose first commit is the retention container's,
+    and the short ones alternate between erase and compaction."""
+    if long_window(cycle):
+        return ["erase", "cleanup", "compact"]
+    if cycle % 2 == 0:
+        return ["erase", "compact", "cleanup"]
+    return ["compact", "erase", "cleanup"]
+
 
 # --- IVF index lifecycle profile (VERDICT r14 #4) -------------------
 IVF_BASE = 200      # ids [0, IVF_BASE) in the initial build
@@ -254,9 +289,7 @@ def run_victim(root: str, seed: int, cycle: int,
              .config("spark.ui.enabled", "false")
              .config("spark.sql.shuffle.partitions", "8")
              .getOrCreate())
-    cfg = EngineConfig(warehouse_dir=f"{root}/wh",
-                       manifest_shards=int(
-                           os.environ.get("SOAK_SHARDS", "0") or 0) or 1)
+    cfg = EngineConfig(warehouse_dir=f"{root}/wh")
     eng = Engine(spark, cfg)
     cmap = containers_for(profile)
     # duo: each engine PROCESS owns a disjoint container set and only
@@ -357,40 +390,40 @@ def run_victim(root: str, seed: int, cycle: int,
             if any(c in RETENTION_CIDS for c in mine) else None
         my_erase = next(c for c in mine if c in ERASE_CIDS) \
             if any(c in ERASE_CIDS for c in mine) else None
-        maint_led = (open(Path(root) / "ledger_maint.jsonl", "a")
-                     if profile == "duo" else None)
+        # every profile ledgers each op's start and outcome, with its
+        # offset from the actor's start and its duration, so coverage
+        # can tell an op the kill window starves from one that fails
+        maint_led = open(Path(root) / "ledger_maint.jsonl", "a")
+        t_actor = time.monotonic()
 
-        def record(op: str, ok: bool) -> None:
-            if maint_led is not None:
-                _append_jsonl(maint_led, {"engine": engine_id, "op": op,
-                                          "ok": ok, "cycle": cycle})
+        def record(op: str, **kv) -> None:
+            _append_jsonl(maint_led, {
+                "engine": engine_id, "op": op, "cycle": cycle,
+                "t": round(time.monotonic() - t_actor, 2), **kv})
 
-        first_pass = True
+        ops = first_pass_order(cycle)
         while True:
-            # shuffled rotation: with a fixed order and short kill
-            # windows the tail op can never complete before the kill
-            # across a whole run (seed 123 starved erase that way).
-            # r16: the FIRST pass of each cycle leads with cleanup —
-            # retention is the slowest op (several Spark jobs under
-            # full victim load) and a shuffled first slot gave it a
-            # completed pass only by seed luck; later passes shuffle,
-            # so compact/erase still can't starve across a run.
-            ops = ["cleanup", "compact", "erase"]
-            if first_pass:
-                first_pass = False
-            else:
-                rnd.shuffle(ops)
             for op in ops:
                 time.sleep(rnd.uniform(0.1, 0.4))
+                record(op, start=True)
+                t_op = time.monotonic()
+
+                def done(ok: bool) -> None:
+                    record(op, ok=ok, dt=round(time.monotonic() - t_op, 2))
                 try:
                     if profile != "duo":
                         if op == "cleanup":
-                            eng.cleanup_all()  # retention (c0 conf) + gc
+                            # retention (c0 conf) + gc
+                            res = eng.cleanup_all()
+                            done(not res[RETENTION_CID].get("conflict"))
                         elif op == "compact":
-                            eng.compact()
+                            res = eng.compact()
+                            done(all(not r.get("conflicts")
+                                     for r in res.values()))
                         else:
                             eng.erase(f"contains(line, '{ERASE_MARK}')",
                                       ERASE_CID)
+                            done(True)
                         continue
                     # duo: each engine runs ALL THREE op classes on
                     # its OWN containers; per-(engine, op) pass rates
@@ -405,7 +438,7 @@ def run_victim(root: str, seed: int, cycle: int,
                             spark, cfg.logs_dir, my_ret,
                             LC(cleanup_max_lines=RETENTION_KEEP))
                         eng.table.gc(keep_generations=2)
-                        record(op, not res.get("conflict"))
+                        done(not res.get("conflict"))
                     elif op == "compact":
                         from logsqlite_spark.operators.compact import (
                             compact_container)
@@ -414,15 +447,18 @@ def run_victim(root: str, seed: int, cycle: int,
                             r = compact_container(spark, cfg.logs_dir,
                                                   cid, min_files=4)
                             conflicts += r.get("conflicts", 0)
-                        record(op, conflicts == 0)
+                        done(conflicts == 0)
                     else:
                         eng.erase(f"contains(line, '{ERASE_MARK}')",
                                   my_erase)
-                        record(op, True)
+                        done(True)
                 except CommitConflict:
-                    record(op, False)  # cross-actor race: retried later
+                    done(False)  # cross-actor race: retried later
                 except Exception as e:  # noqa: BLE001
                     log_err(op, e)
+            # later passes shuffle: with a fixed order the tail op
+            # could starve across a whole run (seed 123 starved erase)
+            rnd.shuffle(ops)
 
     def gc_loop() -> None:
         """An EXTRA gc racing live commits from outside the cleaner
@@ -797,9 +833,10 @@ def check_cycle(spark, root: str, cycle: int, prev: dict,
         last_appended_batch,
     )
     from logsqlite_spark.streaming.ingest import ingest_spool_once
-    from logsqlite_spark.table import open_table
+    from logsqlite_spark.table import ManifestTable
 
     cfg = EngineConfig(warehouse_dir=f"{root}/wh")
+    table = ManifestTable(cfg.logs_dir)
     # forensics snapshot BEFORE any cleanup/drain: if a later invariant
     # fails, this proves whether the bytes were complete ON DISK when
     # the reader ran (splits writer-side truncation from reader-side
@@ -861,9 +898,7 @@ def check_cycle(spark, root: str, cycle: int, prev: dict,
         # remain on disk; every leftover must be provably committed
         # (name <= the manifest's last_file for its container) — an
         # unconsumed leftover after processAllAvailable is real loss
-        mt = open_table(cfg.logs_dir)
-        lf_now = (mt.manifest().get("last_file", {})
-                  if mt.exists() else {})
+        lf_now = table.head().get("last_file", {})
         for p in glob.glob(f"{cfg.spool_dir}/*/*.*"):
             cid = os.path.basename(os.path.dirname(p))
             _check(os.path.basename(p)
@@ -883,7 +918,6 @@ def check_cycle(spark, root: str, cycle: int, prev: dict,
     # read through the MANIFEST (live files only) — the raw directory
     # still holds files retired by compaction/retention until gc, and
     # a raw read would double-count their rows
-    table = open_table(cfg.logs_dir)
     rows = (table.read_df(spark, table.import_existing())
             .select("container_id", "seq", "line").collect()
             if glob.glob(f"{cfg.logs_dir}/container_id=*") else [])
@@ -894,8 +928,7 @@ def check_cycle(spark, root: str, cycle: int, prev: dict,
                f"{r['container_id']}: duplicate seq {r['seq']}")
         d[r["seq"]] = r["line"]
 
-    manifest = (open_table(cfg.logs_dir).manifest()
-                if open_table(cfg.logs_dir).exists() else {})
+    manifest = table.head()
     last_file = {c: os.path.basename(v)
                  for c, v in manifest.get("last_file", {}).items()}
     snap_names = {os.path.basename(p) for p in snap}
@@ -1036,8 +1069,7 @@ def check_cycle(spark, root: str, cycle: int, prev: dict,
                    f"{r['line']!r}")
 
     # I6 manifest generation monotone; no out-of-order quarantine
-    gen = open_table(cfg.logs_dir).manifest().get("generation", 0) \
-        if open_table(cfg.logs_dir).exists() else 0
+    gen = table.head().get("generation", 0)
     _check(gen >= prev.get("generation", 0),
            f"manifest generation regressed: {gen} < "
            f"{prev.get('generation', 0)}")
@@ -1089,8 +1121,8 @@ def run_soak(cycles: int, seed: int, root: str, keep: bool,
     cover = {"follow_rows": 0, "sink_commits": 0, "retention_cycles": 0,
              "erase_holes": 0}
     t0 = time.time()
+    engines = ("a", "b") if profile == "duo" else ("",)
     for cycle in range(cycles):
-        engines = ("a", "b") if profile == "duo" else ("",)
         readies = [Path(root, f"ready_{cycle}" + (f"_{e}" if e else ""))
                    for e in engines]
         procs = []
@@ -1098,8 +1130,6 @@ def run_soak(cycles: int, seed: int, root: str, keep: bool,
             argv = [sys.executable, os.path.abspath(__file__),
                     "--victim", root, str(seed), str(cycle),
                     "--profile", profile]
-            if os.environ.get("SOAK_SHARDS"):
-                argv += ["--shards", os.environ["SOAK_SHARDS"]]
             if e:
                 argv += ["--engine", e]
             procs.append(subprocess.Popen(
@@ -1120,15 +1150,14 @@ def run_soak(cycles: int, seed: int, root: str, keep: bool,
                     if time.time() > deadline:
                         raise SoakViolation("victim never became ready")
                     time.sleep(0.1)
-                # every 4th cycle: a LONG window — the slowest
-                # maintenance op (retention: snapshot + count + top-k
-                # + rewrite + commit under two live streams on 4
-                # cores) takes ~10-14 s end to end; a fixed 2.5-9 s
-                # window made the retention-coverage gate a seed
-                # lottery (r15 seed 61 first fired at cycle ~63).
+                # every 4th cycle: a LONG window that fits erase and
+                # then the retention commit on a just-started victim
+                # (about 10 s + 3-9 s, see first_pass_order); a fixed
+                # 2.5-9 s window made the retention-coverage gate a
+                # seed lottery (r15 seed 61 first fired at cycle ~63).
                 # Kill aggression stays on the other 3 of 4 cycles.
-                if cycle % 4 == 3:
-                    time.sleep(rnd.uniform(10.0, 20.0))
+                if long_window(cycle):
+                    time.sleep(rnd.uniform(*LONG_WINDOW_S))
                 else:
                     time.sleep(rnd.uniform(2.5, 9.0))
         finally:
@@ -1180,30 +1209,44 @@ def run_soak(cycles: int, seed: int, root: str, keep: bool,
     if profile == "ivf":
         cover = {k: prev.get(k, 0) for k in
                  ("done_appends", "done_erases", "compactions")}
-    if profile == "duo":
-        # per-(engine, op) pass rates: cross-process maintenance has
-        # NO shared lock (flock + CommitConflict only), so an op that
-        # never completes in one engine is starvation — the bug class
-        # the in-process lock fixed in r14, now proven cross-process
+    maint_ops: dict = {}
+    if profile != "ivf":
+        # per-(engine, op) outcomes, reported for every profile: starts
+        # without an outcome are ops the kill cut short, so a zero
+        # coverage count reads as starvation or as a failing op.  duo
+        # also gates them: maintenance there shares NO lock across the
+        # two processes (flock + CommitConflict only), so an op that
+        # never completes in one engine is cross-process starvation
         maint = _read_jsonl_tolerant(str(Path(root, "ledger_maint.jsonl")))
-        for e in ("a", "b"):
+        for e in engines:
             for op in ("cleanup", "compact", "erase"):
-                n_ok = sum(1 for r in maint
-                           if r.get("engine") == e and r.get("op") == op
-                           and r.get("ok"))
-                cover[f"maint_{e}_{op}"] = n_ok
+                recs = [r for r in maint
+                        if r.get("engine") == e and r.get("op") == op]
+                key = f"maint_{e}_{op}" if e else f"maint_{op}"
+                ends = sorted(r["dt"] for r in recs if "dt" in r)
+                n_ok = sum(1 for r in recs if r.get("ok"))
+                if profile == "duo":
+                    cover[key] = n_ok
+                maint_ops[key] = {
+                    "started": sum(1 for r in recs if r.get("start")),
+                    "ok": n_ok,
+                    "conflict": sum(1 for r in recs
+                                    if r.get("ok") is False),
+                    "dt_p50_s": ends[len(ends) // 2] if ends else None}
     if cycles >= 10:
         checks = (cover if profile == "ivf" else
                   {**cover, "corrupt_files": prev.get("corrupt_files", 0)})
         for k, v in checks.items():
             if v == 0:
-                print(f"FAIL coverage: {k} == 0 over {cycles} cycles")
+                print(f"FAIL coverage: {k} == 0 over {cycles} cycles; "
+                      f"maintenance ops: {json.dumps(maint_ops)}")
                 return 1
 
     dt = time.time() - t0
     print(json.dumps({"metric": "soak_cycles_green", "value": cycles,
                       "unit": "cycles", "seed": seed,
-                      "wall_s": round(dt, 1), "coverage": cover}))
+                      "wall_s": round(dt, 1), "coverage": cover,
+                      "maintenance_ops": maint_ops}))
     if not keep:
         import shutil
 
@@ -1230,16 +1273,10 @@ def main() -> int:
                          "(VERDICT r14 #4); duo: TWO engine processes "
                          "sharing one warehouse on disjoint "
                          "containers, staggered kills (VERDICT r14 #3)")
-    ap.add_argument("--shards", type=int, default=0,
-                    help="manifest_shards for the warehouse (r16: "
-                         "sharded commit-lock soak; 0 = classic "
-                         "single manifest)")
     ap.add_argument("--engine", default="",
                     help="duo victim identity (internal): a | b")
     ap.add_argument("--victim", nargs=3, metavar=("ROOT", "SEED", "CYCLE"))
     args = ap.parse_args()
-    if args.shards:
-        os.environ["SOAK_SHARDS"] = str(args.shards)
     if args.victim:
         if args.profile == "ivf":
             run_victim_ivf(args.victim[0], int(args.victim[1]),
